@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): runs every SparkEntry query on
@@ -94,18 +95,10 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
     val steadyN = sys.env.getOrElse("SPARK_GRAFT_STEADY", "3").toInt
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.cpus())
     // pay session startup outside every timed region
     Tables(spark, sfDir, "lineitem").count()
     Tables(spark, sfDir, "orders").count()
@@ -125,29 +118,16 @@ object Bench {
       * pass's files (part-file listings grow, dynamic-partition
       * overwrites accumulate untouched partitions). Runs OUTSIDE timed
       * regions. */
-    def resetScratch(): Unit = {
-      def rm(f: java.io.File): Unit = {
-        // listFiles() is null on an unreadable or concurrently-deleted
-        // directory — recover, don't NPE mid-cleanup
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(); ()
-      }
-      val d = new java.io.File("/tmp/graft_scratch")
-      if (d.exists) rm(d)
-    }
+    def resetScratch(): Unit =
+      FileUtils.deleteQuietly(new java.io.File("/tmp/graft_scratch"))
     def timed(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
       try { fn(spark, sfDir).count() }
       catch { case _: Throwable => if (!failed.contains(name)) failed += name }
       val elapsed = (System.nanoTime() - t0) / 1e9
       // clear per-query caches outside the timed region so one query's
-      // pinned blocks don't skew the next query's memory; ALSO drop
-      // raw persisted RDDs — catalog.clearCache() misses them, and the
-      // iterative queries' final localCheckpoint blocks would
-      // otherwise pin storage memory for the rest of the run
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      // pinned blocks don't skew the next query's memory
+      Sessions.reset(spark)
       elapsed
     }
     // pass-boundary markers: wall clock + /proc/loadavg (1/5/15-min),
@@ -229,10 +209,6 @@ object Bench {
     // after the steady passes (JIT/Janino warm — a sub-second rerun of
     // a many-second cold proves the cold number was machine load, not
     // the query; deliberate cold-pass builds rerun fast by design)
-    require(queries.map(_._1).distinct.size == queries.size,
-      "duplicate query names — the rerun name map would pick one " +
-        "lambda silently: " + queries.map(_._1).diff(
-        queries.map(_._1).distinct).mkString(","))
     val qmap = queries.toMap
     val coldRerun: Seq[(String, Double)] =
       if (steadyRuns.isEmpty) Seq.empty
@@ -277,7 +253,7 @@ object Bench {
         // of its cold path with a mechanical verdict — ambient
         // contention does not reproduce with JIT/Janino warm, a real
         // cold-path regression does (deliberate one-time builds retry
-        // fast by design; see BenchDrift.verdict). The retry reuses the
+        // fast by design; see BenchDrift.verdictOpt). The retry reuses the
         // cold_rerun measurement when the query already re-ran there.
         val coldFlagNames = cold.collect { case (n, v)
           if priorCold.contains(n) && BenchDrift.flagged(priorCold(n), v) => n }

@@ -36,19 +36,12 @@ object BenchDrift {
     * codec queries whose end-of-bench retry is GC-noise-bound — retry
     * 4.8 s against its own cold of 1.9 s on byte-identical code, while
     * steady sat at the prior. `ambient_steady_clean` names that
-    * evidence on the artifact. */
-  def verdict(prior: Double, retry: Double,
-              priorSteady: Double, nowSteady: Double): String =
-    if (!flagged(prior, retry)) "ambient"
-    else if (!flagged(priorSteady, nowSteady)) "ambient_steady_clean"
-    else "reproduced"
-
-  /** [[verdict]] with the steady evidence OPTIONAL (ADVICE r12): the
-    * `ambient_steady_clean` exoneration rests on comparing the query's
-    * steady column against the prior artifact — when either side is
+    * evidence on the artifact.
+    *
+    * The steady evidence is OPTIONAL (ADVICE r12): when either side is
     * missing (a query new since the prior run, or a prior artifact
     * with a cold map but no steady map), that comparison cannot run
-    * and the verdict must say so rather than default toward
+    * and the verdict is "unknown" rather than a default toward
     * exoneration via a MaxValue/0.0 sentinel that can never flag. */
   def verdictOpt(prior: Double, retry: Double,
                  priorSteady: Option[Double],

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -172,16 +173,8 @@ object Soak {
       // the symlink path; deleteIfExists throws DirectoryNotEmpty on
       // it, so clear a non-symlink directory recursively first
       if (java.nio.file.Files.isDirectory(link,
-          java.nio.file.LinkOption.NOFOLLOW_LINKS)) {
-        def rm(f: java.io.File): Unit = {
-          // listFiles() is null on an unreadable or concurrently-
-          // deleted directory — a crashed prior run must not make the
-          // recovery path itself NPE
-          if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-          f.delete(); ()
-        }
-        rm(link.toFile)
-      }
+          java.nio.file.LinkOption.NOFOLLOW_LINKS))
+        FileUtils.deleteQuietly(link.toFile)
       java.nio.file.Files.deleteIfExists(link)
       java.nio.file.Files.createSymbolicLink(link,
         java.nio.file.Paths.get(s"$out/$t.parquet").toAbsolutePath)
@@ -389,9 +382,7 @@ object Soak {
           println(s"""{"corpus":"$tag","query":"$q","skipped":"${
             e.getMessage.takeWhile(_ != '\n').take(80)}"}""")
       }
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      Sessions.reset(spark)
     }
     heavyBlocks(spark, tag, dir)
     // round-8: every remaining SparkEntry query gets its own timed
@@ -524,9 +515,7 @@ object Soak {
         spark.catalog.clearCache()
         val (rows, t) =
           time(SparkEntry.queries("db_dbscan_grid")(spark, dir).count())
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
+        Sessions.reset(spark)
         println(f"""{"corpus":"$tag","query":"db_dbscan_grid","points":$nPts,"neighbor_pairs":$nNbr,"pairs_s":$tNbr%.2f,"rows":$rows,"time_s":$t%.2f}""")
       } else
         println(s"""{"corpus":"$tag","query":"db_dbscan_grid","points":$nPts,"skipped":"replicate densifies the fixed grid - pair volume quadratic in copies by ground truth; see comment"}""")
@@ -622,9 +611,7 @@ object Soak {
         println(s"""{"corpus":"$tag","query":"$q","skipped":"${
           msg.takeWhile(_ != '\n').take(80)}"}""")
     }
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = false))
+    Sessions.reset(spark)
   }
 
   private def autoCoverage(spark: SparkSession, tag: String,
@@ -886,12 +873,7 @@ object Soak {
       // round-13 per-batch overwrite wrote) — the measured write drop
       // the append-plus-compact layout buys on a dup-heavy stream
       val outDir = s"/tmp/graft_soak/curate_$tag"
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory)
-          Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(); ()
-      }
-      rm(new java.io.File(outDir))
+      FileUtils.deleteQuietly(new java.io.File(outDir))
       val docs = Tables(spark, dir, "documents").select("doc_id", "text")
       val qs = docs.stat.approxQuantile("doc_id",
         Array(0.2, 0.4, 0.6, 0.8), 0.001).map(_.toLong)
@@ -932,19 +914,11 @@ object Soak {
       }
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val out = s"/tmp/graft_soak/x$copies"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
     val only = args.collectFirst {
       case a if a.startsWith("only=") =>
         a.stripPrefix("only=").split(',').toSeq.filter(_.nonEmpty)
     }.getOrElse(Nil)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.cpus())
     generate(spark, base, out, copies)
     if (only.nonEmpty) {
       // scoped: time just the named queries (base + the xN corpus)

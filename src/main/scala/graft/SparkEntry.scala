@@ -1,5 +1,14 @@
 package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
+
+/** A module of named queries, each with the DuckDB SQL it is checked
+  * against. */
+trait QuerySet {
+  type Q = (SparkSession, String) => DataFrame
+  def queries: Map[String, Q]
+  def oracles: Map[String, String]
+}
+
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
@@ -8,88 +17,34 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     operators.Relational.queries("j3_unpaid_orders")(spark, "/root/testdata/sf0.001")
 
+  /** Every query module, each listed once; both maps below derive from
+    * this list. */
+  lazy val modules: Seq[QuerySet] = {
+    import operators._
+    Seq(Relational, Projections, Curation, Dedup, Similarity, TextAnalysis,
+      Streaming, Multimodal, Recommender, Extensions, FuzzyJoin, CorpusPrep,
+      AsOf, Sketch, Maintenance, CorpusPipeline, CorpusQuality, Sessionize,
+      EventAnalytics, SemanticDedup, JoinReduction, Clustering, ProductQuant,
+      Typed, Graph, Spectral, IvfPq, TimeSeries, Classify, DataQuality,
+      Skyline, Affinity, Collocations, Spatial, Walks, Hierarchy, Density,
+      Diagnostics, sources.Sources, sources.Bucketing)
+  }
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    operators.Relational.queries ++
-      operators.Projections.queries ++
-      operators.Curation.queries ++
-      operators.Dedup.queries ++
-      operators.Similarity.queries ++
-      operators.TextAnalysis.queries ++
-      operators.Streaming.queries ++
-      operators.Multimodal.queries ++
-      operators.Recommender.queries ++
-      operators.Extensions.queries ++
-      operators.FuzzyJoin.queries ++
-      operators.CorpusPrep.queries ++
-      operators.AsOf.queries ++
-      operators.Sketch.queries ++
-      operators.Maintenance.queries ++
-      operators.CorpusPipeline.queries ++
-      operators.CorpusQuality.queries ++
-      operators.Sessionize.queries ++
-      operators.SemanticDedup.queries ++
-      operators.JoinReduction.queries ++
-      operators.Clustering.queries ++
-      operators.ProductQuant.queries ++
-      operators.Typed.queries ++
-      operators.Graph.queries ++
-      operators.Spectral.queries ++
-      operators.IvfPq.queries ++
-      operators.TimeSeries.queries ++
-      operators.Classify.queries ++
-      operators.DataQuality.queries ++
-      operators.Skyline.queries ++
-      operators.Affinity.queries ++
-      operators.Collocations.queries ++
-      operators.Spatial.queries ++
-      operators.Walks.queries ++
-      operators.Hierarchy.queries ++
-      operators.Density.queries ++
-      operators.Diagnostics.queries ++
-      sources.Sources.queries ++
-      sources.Bucketing.queries
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    merge(modules.map(_.queries))
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    operators.Relational.oracles ++
-      operators.Projections.oracles ++
-      operators.Curation.oracles ++
-      operators.Dedup.oracles ++
-      operators.Similarity.oracles ++
-      operators.TextAnalysis.oracles ++
-      operators.Streaming.oracles ++
-      operators.Multimodal.oracles ++
-      operators.Recommender.oracles ++
-      operators.Extensions.oracles ++
-      operators.FuzzyJoin.oracles ++
-      operators.CorpusPrep.oracles ++
-      operators.AsOf.oracles ++
-      operators.Sketch.oracles ++
-      operators.Maintenance.oracles ++
-      operators.CorpusPipeline.oracles ++
-      operators.CorpusQuality.oracles ++
-      operators.Sessionize.oracles ++
-      operators.SemanticDedup.oracles ++
-      operators.JoinReduction.oracles ++
-      operators.Clustering.oracles ++
-      operators.ProductQuant.oracles ++
-      operators.Typed.oracles ++
-      operators.Graph.oracles ++
-      operators.Spectral.oracles ++
-      operators.IvfPq.oracles ++
-      operators.TimeSeries.oracles ++
-      operators.Classify.oracles ++
-      operators.DataQuality.oracles ++
-      operators.Skyline.oracles ++
-      operators.Affinity.oracles ++
-      operators.Collocations.oracles ++
-      operators.Spatial.oracles ++
-      operators.Walks.oracles ++
-      operators.Hierarchy.oracles ++
-      operators.Density.oracles ++
-      operators.Diagnostics.oracles ++
-      sources.Sources.oracles ++
-      sources.Bucketing.oracles
+    * the same parquet tables. */
+  lazy val oracleSql: Map[String, String] = merge(modules.map(_.oracles))
+
+  /** Union of per-module maps that fails, naming the key, when two
+    * modules register the same name (`++` would keep the last one). */
+  def merge[V](maps: Seq[Map[String, V]]): Map[String, V] = {
+    val dups = maps.flatMap(_.keys).groupBy(identity)
+      .collect { case (k, ks) if ks.size > 1 => k }
+    require(dups.isEmpty,
+      s"query name registered by two modules: ${dups.toSeq.sorted.mkString(", ")}")
+    maps.flatten.toMap
+  }
 }

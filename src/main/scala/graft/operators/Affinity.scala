@@ -26,9 +26,7 @@ import graft.Tables
   *    handles any per-user history length) followed by a (from, to)
   *    count aggregation: two shuffles total, both map-side combined.
   */
-object Affinity {
-  type Q = (SparkSession, String) => DataFrame
-
+object Affinity extends graft.QuerySet {
   /** Distinct (basket, item) pairs: an order is a basket, the parts on
     * its lines are the items. EAGER checkpoint: four consumers read it
     * (both self-join sides, the item census, the basket total), and the

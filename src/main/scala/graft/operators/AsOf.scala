@@ -18,9 +18,7 @@ import graft.Tables
   * a naive `t_right <= t_left` theta-join that Spark would execute as a
   * broadcast-nested-loop.
   */
-object AsOf {
-  type Q = (SparkSession, String) => DataFrame
-
+object AsOf extends graft.QuerySet {
   /** Generic as-of: for each left row, the right row with the greatest
     * `ts <= left.ts` per key. If the right side has several rows at the
     * winning ts, the greatest rightId wins (total-order tiebreak — the

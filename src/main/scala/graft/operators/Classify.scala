@@ -38,9 +38,7 @@ import graft.Tables
   * (doc, class) partial-aggregated shuffle. Training is two shuffles
   * on (class, word). No collects anywhere — the model stays a frame.
   */
-object Classify {
-  type Q = (SparkSession, String) => DataFrame
-
+object Classify extends graft.QuerySet {
   private val SEEDS: Map[String, Seq[String]] = Map(
     "sql"  -> Seq("join", "query", "table", "filter", "group"),
     "perf" -> Seq("fast", "slow", "batch", "scan", "sort"),

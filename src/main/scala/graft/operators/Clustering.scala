@@ -33,9 +33,7 @@ import graft.Tables
   * scale, far below cluster-boundary widths; a float deployment drops
   * the quantize step and keeps the identical plan shape.
   */
-object Clustering {
-  type Q = (SparkSession, String) => DataFrame
-
+object Clustering extends graft.QuerySet {
   private val K = 8      // clusters
   private val ITERS = 2  // fixed Lloyd iterations
   private val DIMS = 64

@@ -25,9 +25,7 @@ import graft.Tables
   * stats/AQE) + a global top-k (orderBy+limit = TakeOrdered, never a
   * full sort at the driver).
   */
-object Collocations {
-  type Q = (SparkSession, String) => DataFrame
-
+object Collocations extends graft.QuerySet {
   private def tokens(s: SparkSession, dir: String): DataFrame =
     Tables(s, dir, "documents").select(col("doc_id"),
       posexplode(split(col("text"), " ")).as(Seq("pos", "term")))

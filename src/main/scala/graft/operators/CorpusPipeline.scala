@@ -15,9 +15,7 @@ import graft.Tables
   * correctness is inherited, and the composed oracles recompute the
   * whole chain in SQL.
   */
-object CorpusPipeline {
-  type Q = (SparkSession, String) => DataFrame
-
+object CorpusPipeline extends graft.QuerySet {
   /** Word-8-gram digests of `df` (doc_id, gh) — the dc_decontaminate
     * gram shape, parameterized over the input relation so the recipe
     * can gram both the raw benchmark slice and the cleaned survivors. */

@@ -11,9 +11,7 @@ import graft.Tables
   * feeding a trainer. Both are pure narrow/codegen plans plus at most
   * one hash shuffle; neither sorts globally.
   */
-object CorpusPrep {
-  type Q = (SparkSession, String) => DataFrame
-
+object CorpusPrep extends graft.QuerySet {
   /** chunk window / stride in tokens: 64-token windows every 48 tokens
     * (16-token overlap), the sliding-window shape context-limited
     * encoders use so no sentence is seen only at a window edge. */

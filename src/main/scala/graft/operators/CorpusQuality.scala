@@ -57,9 +57,7 @@ import graft.Tables
   *    magnitude smaller than the corpus), exactly how a tokenizer
   *    trainer shards the merge count at scale.
   */
-object CorpusQuality {
-  type Q = (SparkSession, String) => DataFrame
-
+object CorpusQuality extends graft.QuerySet {
   /** Benchmark membership rule: doc_id ≡ 0 (mod 11) is the held-out
     * eval set (deterministic, data-derived, non-empty at every SF). */
   private[graft] val BENCH_MOD = 11

@@ -11,9 +11,7 @@ import graft.jobs.{CustomerStandardize, InvoiceParse, SalesEnrich}
   * synthesized deterministically from testdata columns — pure
   * integer/string construction, so Spark and DuckDB agree exactly.
   */
-object Curation {
-  type Q = (SparkSession, String) => DataFrame
-
+object Curation extends graft.QuerySet {
   private def pad(e: Column, n: Int) = lpad(e.cast("string"), n, "0")
 
   /** Family-A1 customer shape (CUSTOMER_ID, NAME, phones, POSTCODE, …)

@@ -20,9 +20,7 @@ import graft.Tables
   * the dimension side broadcasts when small. Nothing here collects,
   * loops, or re-reads.
   */
-object DataQuality {
-  type Q = (SparkSession, String) => DataFrame
-
+object DataQuality extends graft.QuerySet {
   private def viol(cond: Column): Column =
     sum(when(cond, 1L).otherwise(0L))
 

@@ -18,9 +18,7 @@ import graft.Tables
   * scored. Hashing is md5-based so the DuckDB oracles reproduce results
   * bit-for-bit.
   */
-object Dedup {
-  type Q = (SparkSession, String) => DataFrame
-
+object Dedup extends graft.QuerySet {
   /** Distinct word-3-gram shingles per doc, over ANY (doc_id, text)
     * frame (the api.Corpus facade's entry). Guarded: docs with <3
     * words yield no shingles (Spark's `sequence(1,0)` would descend!). */

@@ -34,9 +34,7 @@ import graft.Tables
   * bounds the edge list — eps and minPts control it, exactly as in
   * single-node DBSCAN.
   */
-object Density {
-  type Q = (SparkSession, String) => DataFrame
-
+object Density extends graft.QuerySet {
   private val EPS2 = 144 // eps = 12 (grid cell = eps)
   private val MINPTS = 4
 

@@ -17,9 +17,7 @@ import graft.Tables
   * established cross-engine contracts), so each query hash-matches
   * its DuckDB oracle.
   */
-object Diagnostics {
-  type Q = (SparkSession, String) => DataFrame
-
+object Diagnostics extends graft.QuerySet {
   private val DAY_US = 86400000000L
   private val GAP_US = 7L * DAY_US
 

@@ -25,9 +25,7 @@ import graft.Tables
   * All timestamps export as epoch micros (exact integers), so the
   * DuckDB oracles hash-match with zero tolerance.
   */
-object EventAnalytics {
-  type Q = (SparkSession, String) => DataFrame
-
+object EventAnalytics extends graft.QuerySet {
   val queries: Map[String, Q] = Map(
     "ev_funnel" -> ((s, dir) => {
       val e = Tables.events(s, dir)

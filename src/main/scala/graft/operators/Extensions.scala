@@ -16,8 +16,7 @@ import graft.Tables
   * differs between engines), grouping flags and ntile are cast to int
   * (int32 vs int64), arrays are emitted as joined strings.
   */
-object Extensions {
-  type Q = (SparkSession, String) => DataFrame
+object Extensions extends graft.QuerySet {
   private def dec(c: org.apache.spark.sql.Column) = c.cast(DecimalType(38, 2))
 
   val queries: Map[String, Q] = Map(

@@ -44,9 +44,7 @@ import graft.Tables
   * truncated substrings that are strictly shorter than the segment
   * they'd have to equal, so they can never join — no correctness edge.
   */
-object FuzzyJoin {
-  type Q = (SparkSession, String) => DataFrame
-
+object FuzzyJoin extends graft.QuerySet {
   private val TAU = 3
   private val K = TAU + 1 // segments per string
 

@@ -30,9 +30,7 @@ import graft.Tables
   * scale). No driver-side collect anywhere: the loop composes lazy
   * plans and a single action materializes the final ranks.
   */
-object Graph {
-  type Q = (SparkSession, String) => DataFrame
-
+object Graph extends graft.QuerySet {
   private val SCALE = 1000000L  // rank units: millionths
   private val ITERS = 3
 

@@ -25,9 +25,7 @@ import graft.Tables
   * deliberately does not use. HierarchySpec pins the round count at
   * ceil(log2(depth)) and the rollup against a driver-side walk.
   */
-object Hierarchy {
-  type Q = (SparkSession, String) => DataFrame
-
+object Hierarchy extends graft.QuerySet {
   /** Rounds the most recent flatten call took — spec observability. */
   @volatile private[graft] var lastRounds: Int = 0
 

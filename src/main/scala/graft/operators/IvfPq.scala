@@ -35,9 +35,7 @@ import graft.Tables
   * step is integer-exact, so the DuckDB oracle replays the entire
   * index build and search bit-for-bit.
   */
-object IvfPq {
-  type Q = (SparkSession, String) => DataFrame
-
+object IvfPq extends graft.QuerySet {
   private val C = 16      // coarse cells
   private val PROBES = 4  // cells probed per query
   private val M = 8       // PQ subspaces

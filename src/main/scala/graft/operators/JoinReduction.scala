@@ -27,9 +27,7 @@ import graft.functions.BloomAgg
   * the bitset's value begins where the dimension outgrows the
   * broadcast threshold but its KEY SET still fits a few KiB/key-bits.
   */
-object JoinReduction {
-  type Q = (SparkSession, String) => DataFrame
-
+object JoinReduction extends graft.QuerySet {
   private def dec(c: org.apache.spark.sql.Column) = c.cast(DecimalType(38, 2))
 
   val queries: Map[String, Q] = Map(

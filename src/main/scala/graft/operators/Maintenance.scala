@@ -12,9 +12,7 @@ import graft.jobs.{DataQuality, Scd2, Upsert}
   * (micro-partitions, automatic clustering, skew handling) re-expressed
   * as explicit Spark plans.
   */
-object Maintenance {
-  type Q = (SparkSession, String) => DataFrame
-
+object Maintenance extends graft.QuerySet {
   private def scratch(dir: String, tag: String): String =
     s"/tmp/graft_scratch/${dir.replaceAll("[^A-Za-z0-9.]", "_")}/$tag"
 

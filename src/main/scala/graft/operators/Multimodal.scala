@@ -31,9 +31,7 @@ import graft.Tables
   * hash-green run proves the codec round-trip is bit-exact, not that
   * two fakes agree.
   */
-object Multimodal {
-  type Q = (SparkSession, String) => DataFrame
-
+object Multimodal extends graft.QuerySet {
   // ImageIO's DEFAULT stream cache is DISK-BACKED: ImageIO.write/read
   // on an in-memory stream still spools every image through a temp
   // file in java.io.tmpdir (FileCacheImageOutput/InputStream when

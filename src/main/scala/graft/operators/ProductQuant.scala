@@ -29,9 +29,7 @@ import graft.Tables
   * 8-byte-per-vector code table, 32× smaller than the float corpus.
   * Rerank fetches full vectors for RERANK rows per query, not n.
   */
-object ProductQuant {
-  type Q = (SparkSession, String) => DataFrame
-
+object ProductQuant extends graft.QuerySet {
   private val M = 8       // subspaces
   private val DSUB = 8    // dims per subspace
   private val CB = 16     // codebook entries per subspace

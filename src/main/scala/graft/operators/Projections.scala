@@ -11,9 +11,7 @@ import graft.Tables
   * functions only, no UDFs); filters and column pruning push down to the
   * parquet scan.
   */
-object Projections {
-  type Q = (SparkSession, String) => DataFrame
-
+object Projections extends graft.QuerySet {
   val queries: Map[String, Q] = Map(
     // P2+P3+F13: derived column (qty × price, the reference's SALES_AMT at
     // code/curate/04_sales_enrich_sp.sql:33) + rename (02:29). Decimal

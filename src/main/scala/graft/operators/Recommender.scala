@@ -33,9 +33,7 @@ import graft.Tables
   *    ~0.1 below the threshold, so double-rounding differences between
   *    engines cannot flip membership.
   */
-object Recommender {
-  type Q = (SparkSession, String) => DataFrame
-
+object Recommender extends graft.QuerySet {
   private val MIN_ORDERS = 12
   private val TOPK = 3
 

@@ -15,8 +15,7 @@ import graft.Tables
   * hash canonicalizes DECIMAL renderings inconsistently across engines);
   * no row_number/rank columns in output (Spark emits int32, DuckDB int64).
   */
-object Relational {
-  type Q = (SparkSession, String) => DataFrame
+object Relational extends graft.QuerySet {
   private def dec(c: org.apache.spark.sql.Column) = c.cast(DecimalType(38, 2))
 
   val queries: Map[String, Q] = Map(

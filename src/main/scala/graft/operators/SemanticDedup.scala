@@ -28,9 +28,7 @@ import graft.Tables
   * would also split any cluster above a size bound by re-clustering it
   * with a finer centroid set (hierarchical k-means).
   */
-object SemanticDedup {
-  type Q = (SparkSession, String) => DataFrame
-
+object SemanticDedup extends graft.QuerySet {
   private val C = 64    // centroid count (vec_id < C)
   private val TH = 0.38 // cosine threshold for "semantic duplicate"
 

@@ -18,9 +18,7 @@ import graft.Tables
   * streaming equivalent (`session_window`, checked in SessionizeSpec)
   * shares the same gap rule.
   */
-object Sessionize {
-  type Q = (SparkSession, String) => DataFrame
-
+object Sessionize extends graft.QuerySet {
   val GAP = "6 hours"
   private val GAP_US = 6L * 3600 * 1000000
 
@@ -104,7 +102,7 @@ object Sessionize {
           expr("unix_micros(sw.end)").as("end_us"),
           col("n_events"))
         .orderBy("user_id", "start_us"))
-  ) ++ EventAnalytics.queries
+  )
 
   val oracles: Map[String, String] = Map(
     "sz_sessionize" ->
@@ -147,5 +145,5 @@ object Sessionize {
         |  count(*) AS n_events
         |FROM sess GROUP BY user_id, session_id
         |ORDER BY user_id, start_us""".stripMargin
-  ) ++ EventAnalytics.oracles
+  )
 }

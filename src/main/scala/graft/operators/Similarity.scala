@@ -18,9 +18,7 @@ import graft.functions.VectorFunctions
   * Centroids are chosen deterministically (vec_id < C) so the DuckDB
   * oracle reproduces the exact bucketing.
   */
-object Similarity {
-  type Q = (SparkSession, String) => DataFrame
-
+object Similarity extends graft.QuerySet {
   private val C = 16      // IVF centroid count
   private val PROBES = 4  // buckets probed per query
   private val TOPK = 5

@@ -13,9 +13,7 @@ import graft.functions.{CardSketch, FreqSketch, QuantileSketch}
   * 60-bit integer → bucket/rank via generated CASE chain) — integer-
   * exact, no estimate drift in the comparison.
   */
-object Sketch {
-  type Q = (SparkSession, String) => DataFrame
-
+object Sketch extends graft.QuerySet {
   val queries: Map[String, Q] = Map(
     // SpaceSaving heavy hitters over the corpus token stream. Capacity
     // 64 exceeds the testdata vocabulary, so the summary is EXACT

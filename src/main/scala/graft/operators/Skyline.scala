@@ -36,9 +36,7 @@ import graft.Tables
   * corpus (skyline ≈ n) would need a partition-tree merge instead,
   * and the operator documents that contract rather than hiding it.
   */
-object Skyline {
-  type Q = (SparkSession, String) => DataFrame
-
+object Skyline extends graft.QuerySet {
   /** (group, key, x, y) — dominance: lower x better, higher y better. */
   case class SkyRow(grp: String, key: Long, x: Double, y: Int)
 

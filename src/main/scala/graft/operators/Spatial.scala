@@ -33,9 +33,7 @@ import graft.Tables
   * the moderate case). No broadcast hint: either side may be the
   * small one, and at 100 TB neither fits — stats/AQE decide.
   */
-object Spatial {
-  type Q = (SparkSession, String) => DataFrame
-
+object Spatial extends graft.QuerySet {
   private val R = 8 // search radius; also the grid cell size
   private val R2 = R * R
 

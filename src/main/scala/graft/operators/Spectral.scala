@@ -27,9 +27,7 @@ import graft.Tables
   * map-side dot per row, and a 64-group partial aggregation — the 100 TB
   * cost is two scans, independent of dimension² (no covariance shuffle).
   */
-object Spectral {
-  type Q = (SparkSession, String) => DataFrame
-
+object Spectral extends graft.QuerySet {
   private val DIMS = 64
   private val FP = 10000L  // fixed-point scale of the iterated vector
   private val ITERS = 2

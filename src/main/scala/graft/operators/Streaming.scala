@@ -12,9 +12,7 @@ import graft.streaming.StreamingIngest
   * exercised in StreamingSpec (checkpoint restart, exactly-once,
   * AvailableNow drain).
   */
-object Streaming {
-  type Q = (SparkSession, String) => DataFrame
-
+object Streaming extends graft.QuerySet {
   private def scratch(dir: String): String =
     s"/tmp/graft_scratch/${dir.replaceAll("[^A-Za-z0-9.]", "_")}/stream_json"
 

@@ -16,9 +16,7 @@ import graft.Tables
   * broadcast join; everything else is per-row expressions inside
   * whole-stage codegen.
   */
-object TextAnalysis {
-  type Q = (SparkSession, String) => DataFrame
-
+object TextAnalysis extends graft.QuerySet {
   /** (lang, marker-word) pairs — tiny, broadcast. */
   private val markers: Seq[(String, String)] = Seq(
     "en" -> "the", "en" -> "and", "en" -> "of", "en" -> "to", "en" -> "a",

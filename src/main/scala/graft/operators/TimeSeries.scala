@@ -27,9 +27,7 @@ import graft.Tables
   * engine. The bars sum money through DECIMAL(38,2) and cast the
   * result to double once.
   */
-object TimeSeries {
-  type Q = (SparkSession, String) => DataFrame
-
+object TimeSeries extends graft.QuerySet {
   private def dec(c: Column) = c.cast(DecimalType(38, 2))
 
   /** Lags 0..9, weight 2^(9-k) — integer EWMA numerator/denominator. */

@@ -27,9 +27,7 @@ final case class OrderStats(n: Long, maxPrice: Double)
   * like the untyped `agg(count, max)`. `mapGroups` would lose that
   * (full groups shuffle); this is the typed API used right.
   */
-object Typed {
-  type Q = (SparkSession, String) => DataFrame
-
+object Typed extends graft.QuerySet {
   /** (count, running max) per customer — partial-agg-friendly. */
   private object OrderStatsAgg
     extends Aggregator[Order, (Long, Double), OrderStats] {

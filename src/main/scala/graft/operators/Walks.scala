@@ -30,9 +30,7 @@ import graft.Tables
   * count and length are the knobs, and neither multiplies |E|. The
   * union of per-position frames is linear output (starts × (L+1)).
   */
-object Walks {
-  type Q = (SparkSession, String) => DataFrame
-
+object Walks extends graft.QuerySet {
   private val P = 1000000007L
   private val A = 1315423911L
   private val B = 2654435761L

@@ -11,9 +11,7 @@ import graft.Tables
   * clustered micro-partitions. At 100 TB this is THE way to make a
   * daily fact⋈fact join cheap: pay the shuffle once at write time.
   */
-object Bucketing {
-  type Q = (SparkSession, String) => DataFrame
-
+object Bucketing extends graft.QuerySet {
   private val BUCKETS = 8
 
   /** Write `name` bucketed+sorted by `key` as a managed table (rerun-safe

@@ -9,9 +9,7 @@ import graft.Tables
   * scans over unstructured blobs, CTAS + overwrite table writes, and
   * table scans by qualified name.
   */
-object Sources {
-  type Q = (SparkSession, String) => DataFrame
-
+object Sources extends graft.QuerySet {
   /** Stable scratch dir per sf input (JSON round-trips, managed tables). */
   private def scratch(dir: String, tag: String): String =
     s"/tmp/graft_scratch/${dir.replaceAll("[^A-Za-z0-9.]", "_")}/$tag"

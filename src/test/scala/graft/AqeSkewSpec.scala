@@ -11,21 +11,12 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class AqeSkewSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = {
-    // getOrCreate on an existing session APPLIES this builder's runtime
-    // SQL confs to it — leaking autoBroadcastJoinThreshold=-1 etc. into
-    // the shared TestSpark session for every suite that runs after this
-    // one (observed: PlanInvariantSpec broadcast pins flipping to
-    // CartesianProduct in full-suite runs only). Clear the
-    // active/default session so a FRESH session (same SparkContext)
-    // carries the skew-tuned confs, then restore the shared one.
-    val prior = SparkSession.getDefaultSession
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-aqe-test")
-      .config("spark.sql.shuffle.partitions", "4")
+  // isolated: on the shared session these confs would leak
+  // autoBroadcastJoinThreshold=-1 etc. into every later suite
+  // (observed: PlanInvariantSpec broadcast pins flipping to
+  // CartesianProduct in full-suite runs only)
+  private lazy val spark: SparkSession =
+    TestSpark.isolated("graft-aqe-test")(_
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
@@ -40,17 +31,7 @@ class AqeSkewSpec extends AnyFunSuite {
       // AQE splits a skewed reduce partition by MAPPER ranges — a single
       // input split means a single mapper and nothing to split, so force
       // several map tasks over the one parquet file
-      .config("spark.sql.files.maxPartitionBytes", "1MB")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    prior.foreach { p =>
-      SparkSession.setDefaultSession(p)
-      SparkSession.setActiveSession(p)
-    }
-    s
-  }
+      .config("spark.sql.files.maxPartitionBytes", "1MB"))
 
   test("AQE splits the skewed partition at runtime") {
     val sf01 = "/root/testdata/sf0.1"

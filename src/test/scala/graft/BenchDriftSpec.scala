@@ -27,7 +27,7 @@ class BenchDriftSpec extends AnyFunSuite {
     // a retry reproducing the excess (with steady ALSO moved) indicts
     def v(prior: Double, retry: Double,
           sPrior: Double = 1.0, sNow: Double = 10.0): String =
-      BenchDrift.verdict(prior, retry, sPrior, sNow)
+      BenchDrift.verdictOpt(prior, retry, Some(sPrior), Some(sNow))
     assert(v(prior = 9.37, retry = 10.1) == "ambient")
     assert(v(prior = 9.37, retry = 38.0) == "reproduced")
     // boundary follows the flag rule exactly
@@ -38,16 +38,16 @@ class BenchDriftSpec extends AnyFunSuite {
     // the first run's own false positive (mm_resize_stats): retry 4.79
     // against prior cold 0.82 flags, but steady 0.75 -> 0.92 is clean —
     // code cannot have regressed cold-only on a non-memoized path
-    assert(BenchDrift.verdict(prior = 0.815, retry = 4.789,
-      priorSteady = 0.747, nowSteady = 0.915) == "ambient_steady_clean")
+    assert(v(prior = 0.815, retry = 4.789, sPrior = 0.747, sNow = 0.915)
+      == "ambient_steady_clean")
     // and a flagged retry WITH a flagged steady stays reproduced
-    assert(BenchDrift.verdict(prior = 0.815, retry = 4.789,
-      priorSteady = 0.747, nowSteady = 2.5) == "reproduced")
+    assert(v(prior = 0.815, retry = 4.789, sPrior = 0.747, sNow = 2.5)
+      == "reproduced")
   }
 
   test("verdictOpt: missing steady evidence yields 'unknown', never " +
     "the exoneration path (ADVICE r12)") {
-    // with both steady legs present, verdictOpt == verdict
+    // with both steady legs present, the steady comparison decides
     assert(BenchDrift.verdictOpt(prior = 0.815, retry = 0.9,
       priorSteady = Some(0.747), nowSteady = Some(0.915)) == "ambient")
     assert(BenchDrift.verdictOpt(prior = 0.815, retry = 4.789,

@@ -42,4 +42,17 @@ class SchemaLintSpec extends SparkSpec {
     assert((q -- o).isEmpty, s"queries without oracle: ${q -- o}")
     assert((o -- q).isEmpty, s"oracles without query: ${o -- q}")
   }
+
+  test("a query name registered by two modules fails, naming the key") {
+    val e = intercept[IllegalArgumentException](SparkEntry.merge(Seq(
+      Map("a_q" -> 1, "dup_q" -> 2), Map("dup_q" -> 3, "b_q" -> 4))))
+    assert(e.getMessage.contains("dup_q"), e.getMessage)
+    assert(!e.getMessage.contains("a_q"), e.getMessage)
+  }
+
+  test("every module's queries and oracles land in the registry") {
+    val mods = SparkEntry.modules
+    assert(mods.map(_.queries.size).sum === SparkEntry.queries.size)
+    assert(mods.map(_.oracles.size).sum === SparkEntry.oracleSql.size)
+  }
 }

@@ -10,31 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * has no extensions). */
 class WindowRewriteSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = {
-    // getOrCreate would silently hand back the shared extension-less
-    // test session if another suite built it first (builder extensions
-    // only apply at session CREATION) — clear the active/default
-    // session so a fresh one with GraftExtensions is built on the
-    // shared SparkContext, then restore the shared session as default
-    // for the suites that run after this one.
-    val prior = SparkSession.getDefaultSession
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-ext-test")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    prior.foreach { p =>
-      SparkSession.setDefaultSession(p)
-      SparkSession.setActiveSession(p)
-    }
-    s
-  }
+  private lazy val spark: SparkSession =
+    TestSpark.isolated("graft-ext-test")(_.withExtensions(new GraftExtensions))
 
   private def topkPattern(k: Int) = {
     val w = Window.partitionBy("c_mktsegment")
