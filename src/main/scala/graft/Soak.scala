@@ -164,7 +164,7 @@ object Soak {
     val dims = s"$out/dims"
     new java.io.File(dims).mkdirs()
     for (t <- Seq("part", "nation", "region"))
-      spark.read.parquet(s"$base/$t.parquet")
+      Tables(spark, base, t)
         .write.mode("overwrite").parquet(s"$dims/$t.parquet")
     for (t <- Seq("lineitem", "orders", "customer", "supplier", "events",
       "documents", "embeddings")) {

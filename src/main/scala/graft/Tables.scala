@@ -1,6 +1,11 @@
 package graft
 
+import java.io.FileNotFoundException
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Parquet table readers over a scale-factor directory (see TESTDATA.md).
   *
@@ -8,14 +13,67 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (`code/curate/02_customer_sp.sql:22` `session.table(...)`) re-expressed as
   * self-describing Parquet reads — the scan is vectorized (`ColumnarBatch`)
   * and Catalyst pushes filters/projections down to the parquet reader.
+  *
+  * Each table's schema is resolved once per file version, as the
+  * reference's `CREATE TABLE … USING TEMPLATE (… INFER_SCHEMA …)`
+  * (`3A_load_cust_data.sql:6-19`) types a raw table once at load:
+  * Spark's own parquet inference is a one-task footer-read job, which
+  * every plain `spark.read.parquet` pays again.
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    resolvedSchema(spark, path)
+      .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+  }
+
+  /** What a schema was inferred from: the name, length and modification
+    * time of every entry directly under the path (the file itself for a
+    * single-file table; the part files, renamed on every rewrite, for a
+    * Spark-written directory), and the session confs that steer Spark's
+    * parquet -> Catalyst type conversion. */
+  private final case class Resolved(files: Seq[(String, Long, Long)],
+                                    conf: Map[String, String],
+                                    schema: StructType)
+
+  // one entry per qualified path, JVM-wide and shared by every session;
+  // an entry whose files or confs no longer match (Tables.events flips
+  // nanosAsLong) is re-inferred and replaced
+  private val resolved = new ConcurrentHashMap[String, Resolved]()
+
+  /** The schema `spark.read.parquet(path)` would infer, inferred at most
+    * once per (file version, conf snapshot); None when the path does not
+    * list, so the caller's plain read raises Spark's own PATH_NOT_FOUND. */
+  private def resolvedSchema(spark: SparkSession,
+                             path: String): Option[StructType] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val listing =
+      try Some(fs.listStatus(p))
+      catch { case _: FileNotFoundException => None }
+    listing.map { entries =>
+      val files = entries.toSeq
+        .map(st => (st.getPath.getName, st.getLen, st.getModificationTime))
+        .sorted
+      val conf = spark.conf.getAll.filter { case (k, _) =>
+        k.startsWith("spark.sql.parquet.") ||
+          k.startsWith("spark.sql.legacy.parquet.") ||
+          k == "spark.sql.caseSensitive"
+      }
+      val key = fs.makeQualified(p).toString
+      val hit = resolved.get(key)
+      if (hit != null && hit.files == files && hit.conf == conf) hit.schema
+      else {
+        val schema = spark.read.parquet(path).schema
+        resolved.put(key, Resolved(files, conf, schema))
+        schema
+      }
+    }
+  }
 
   /** Raise a narrow source's parallelism to the cluster default before
     * heavy per-row compute (signature hashing, shingling, codecs): a

@@ -32,28 +32,23 @@ object Bucketing extends graft.QuerySet {
   // verdict asked for: the cold pass times write+join, the steady pass
   // times the recurring join alone — the figure the 100 TB story quotes.
   // (First use in a session always drops+rewrites, so a stale table from
-  // an earlier session at a different SF can't leak in.)
-  private val written =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
+  // an earlier session at a different SF can't leak in. The guard is
+  // Materialize's, keyed on the session object itself: an identity hash
+  // can be reused once a session is collected.)
   def writeBucketedOnce(s: SparkSession, dir: String, name: String,
                         key: String): String =
-    written.computeIfAbsent(
-      s"${System.identityHashCode(s)}|$dir|$name|$key",
-      _ => writeBucketed(s, dir, name, key))
+    Materialize.writeOnce(s, s"$dir|$name|$key", s"graft_${name}_bucketed")(
+      writeBucketed(s, dir, name, key))
 
   /** CTAS the parsed invoice text once per (session, sf-dir) —
     * reference 3B2_load_pdf_to_text.sql's materialization step. */
-  def writeInvoiceTextOnce(s: SparkSession, dir: String): String =
-    written.computeIfAbsent(
-      s"${System.identityHashCode(s)}|$dir|invoice_text",
-      _ => {
-        val table = "graft_invoice_text"
-        graft.jobs.TableIO.overwrite(s,
-          graft.jobs.InvoiceParse.parse(
-            graft.operators.Curation.invoiceRawText(s, dir)), table)
-        table
-      })
+  def writeInvoiceTextOnce(s: SparkSession, dir: String): String = {
+    val table = "graft_invoice_text"
+    Materialize.writeOnce(s, dir, table)(
+      graft.jobs.TableIO.overwrite(s,
+        graft.jobs.InvoiceParse.parse(
+          graft.operators.Curation.invoiceRawText(s, dir)), table))
+  }
 
   val queries: Map[String, Q] = Map(
     // Co-located join: both sides bucketed by the join key → the merge

@@ -68,19 +68,27 @@ object Materialize {
     * (see [[lockFor]] — a build that reads ANOTHER tableOnce artifact
     * must be able to re-enter the map). */
   def tableOnce(s: SparkSession, key: String, table: String)
-               (build: => DataFrame): DataFrame = {
+               (build: => DataFrame): DataFrame =
+    s.table(writeOnce(s, key, table)(
+      graft.jobs.TableIO.overwrite(s, build, table)))
+
+  /** Run `write`, which saves managed table `table`, once per (session,
+    * key) and return the table name — the guard under [[tableOnce]],
+    * also taken by writers with their own table layout ([[Bucketing]]). */
+  private[graft] def writeOnce(s: SparkSession, key: String, table: String)
+                              (write: => Unit): String = {
     val m = sessionMap(s)
     val k = s"$key|$table"
     var t = m.get(k)
     if (t == null) lockFor(s, "tbl|" + k).synchronized {
       t = m.get(k)
       if (t == null) {
-        graft.jobs.TableIO.overwrite(s, build, table)
+        write
         m.put(k, table)
         t = table
       }
     }
-    s.table(t)
+    t
   }
 
   /** Hook the ANN operators thread their index artifacts through: given

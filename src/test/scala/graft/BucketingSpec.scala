@@ -29,4 +29,25 @@ class BucketingSpec extends SparkSpec {
     assert(processed.count() === Tables(spark, sf, "customer").count())
     assert(processed.columns.contains("ZIP")) // POSTCODE renamed
   }
+
+  test("an isolated session rewrites graft_invoice_text after the " +
+      "shared session wrote it") {
+    Bucketing.writeInvoiceTextOnce(spark, sf)
+    val iso = TestSpark.isolated("graft-bucketing-test")(identity)
+    val orders = Tables(spark, sf, "orders").count()
+    try {
+      // the stale table an earlier session (at another SF) leaves behind
+      graft.jobs.TableIO.overwrite(iso, iso.range(1).toDF("stale"),
+        "graft_invoice_text")
+      assert(Bucketing.writeInvoiceTextOnce(iso, sf) === "graft_invoice_text")
+      val rewritten = iso.table("graft_invoice_text")
+      assert(rewritten.columns.contains("inv_status"))
+      assert(rewritten.count() === orders)
+    } finally {
+      // both catalogs point at one warehouse directory: drop the shared
+      // session's cached file listing of the replaced files
+      spark.catalog.refreshTable("graft_invoice_text")
+    }
+    assert(spark.table("graft_invoice_text").count() === orders)
+  }
 }

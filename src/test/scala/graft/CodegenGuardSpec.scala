@@ -136,6 +136,48 @@ class CodegenGuardSpec extends SparkSpec {
     }
   }
 
+  test("JaroWinklerSim generated Java compiles and matches interpreted eval") {
+    val e = graft.functions.JaroWinklerSim(
+      BoundReference(0, StringType, nullable = true),
+      BoundReference(1, StringType, nullable = true))
+    for ((a, b) <- Seq("MARTHA" -> "MARHTA", "DIXON" -> "DICKSONX",
+                       "same" -> "same", "" -> "abc")) {
+      val row = InternalRow(UTF8String.fromString(a), UTF8String.fromString(b))
+      val gen = codegenValue(e, row, _.getDouble(0))
+      assert(gen === e.eval(row), s"($a, $b) codegen/interp divergence")
+    }
+    val empty = InternalRow(UTF8String.fromString(""),
+      UTF8String.fromString("abc"))
+    assert(codegenValue(e, empty, _.getDouble(0)) === 0.0)
+    // the null branch survives codegen too
+    val withNull = InternalRow(null, UTF8String.fromString("abc"))
+    assert(GenerateUnsafeProjection.generate(Seq(e))(withNull).isNullAt(0))
+    assert(e.eval(withNull) === null)
+  }
+
+  test("SortedJaccardMeets generated Java compiles and matches " +
+      "interpreted eval") {
+    val e = graft.functions.SortedJaccardMeets(
+      BoundReference(0, ArrayType(LongType), nullable = true),
+      BoundReference(1, ArrayType(LongType), nullable = true))
+    def longs(xs: Long*) = new GenericArrayData(xs.map(x => x: Any).toArray)
+    // qualifies (|∩| = 5), disqualified by the merge (-1), pruned by
+    // length (-2), both empty (|∩| = 0 meets 3·0 ≥ 0)
+    for (((a, b), expected) <- Seq(
+        (longs(1, 2, 3, 4, 5, 6), longs(2, 3, 4, 5, 6, 7)) -> 5L,
+        (longs((2L to 200L by 2): _*), longs((1L to 199L by 2): _*)) -> -1L,
+        (longs(1), longs(1, 2, 3, 4, 5, 6)) -> -2L,
+        (longs(), longs()) -> 0L)) {
+      val row = InternalRow(a, b)
+      val gen = codegenValue(e, row, _.getLong(0))
+      assert(gen === e.eval(row), s"$expected codegen/interp divergence")
+      assert(gen === expected)
+    }
+    val withNull = InternalRow(null, longs(1, 2))
+    assert(GenerateUnsafeProjection.generate(Seq(e))(withNull).isNullAt(0))
+    assert(e.eval(withNull) === null)
+  }
+
   test("near-dup pipeline end-to-end under CODEGEN_ONLY with fallback off") {
     val conf = spark.conf
     val prevFactory = conf.getOption("spark.sql.codegen.factoryMode")
