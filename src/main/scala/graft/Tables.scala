@@ -88,10 +88,14 @@ object Tables {
     * repartition is deterministic (sort-before-repartition) and every
     * consumer aggregates by key, so results are unaffected. Call only
     * on raw scans / narrow projections: deciding the no-op branch
-    * plans the frame once. */
+    * plans the frame once. The probe reads `queryExecution.toRdd`, the
+    * frame's own cached execution RDD, not `Dataset.rdd`, which would
+    * build an extra deserializer lineage just to count partitions
+    * (ADVICE r10). No job runs either way. */
   def spread(df: DataFrame): DataFrame = {
     val n = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions >= n) df else df.repartition(n)
+    if (df.queryExecution.toRdd.getNumPartitions >= n) df
+    else df.repartition(n)
   }
 
   /** `events.parquet` has shipped with two physical `ts` encodings across

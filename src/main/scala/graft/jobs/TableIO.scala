@@ -4,11 +4,6 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 object TableIO {
-  /** Overwrite a managed table rerun-safely across fresh sessions: the
-    * in-memory catalog forgets tables between JVMs but their warehouse
-    * directories persist, so a bare CTAS/saveAsTable would fail with
-    * LOCATION_ALREADY_EXISTS. Drop, clear the stale location, then save.
-    */
   /** Drop a (possibly db-qualified) managed table AND its warehouse
     * directory — a fresh session's in-memory catalog forgets tables but
     * their dirs persist, so DROP alone leaves LOCATION_ALREADY_EXISTS
@@ -25,6 +20,11 @@ object TableIO {
       .delete(loc, true)
   }
 
+  /** Overwrite a managed table rerun-safely across fresh sessions: the
+    * in-memory catalog forgets tables between JVMs but their warehouse
+    * directories persist, so a bare CTAS/saveAsTable would fail with
+    * LOCATION_ALREADY_EXISTS. Drop, clear the stale location, then save.
+    */
   def overwrite(spark: SparkSession, df: DataFrame, table: String): Unit = {
     dropWithLocation(spark, table)
     df.write.mode("overwrite").saveAsTable(table)

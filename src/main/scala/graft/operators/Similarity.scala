@@ -29,26 +29,6 @@ object Similarity extends graft.QuerySet {
   private val MMRC = 20   // MMR candidate pool per query (selects TOPK)
   private val KNN_PROBES = 200 // kNN-probe evaluation batch: vec_id < 200
 
-  /** Under-split guard for probes×corpus broadcast scans: a
-    * single-row-group parquet (the small-SF bench shape) exposes ONE
-    * scan partition, serializing the whole dot scan onto one task.
-    * When the scan has fewer partitions than the session's parallelism,
-    * redistribute once — the exchange moves the corpus rows exactly
-    * once, strictly less data than the join output that already
-    * shuffles into the rank window. A production-scale corpus is
-    * already split into many row groups and takes the no-exchange
-    * branch. The probe reads `queryExecution.toRdd` — the internal
-    * binary RDD the frame's own execution uses (a cached lazy val, so
-    * the no-exchange branch reuses it for free) — instead of
-    * `Dataset.rdd`, which would eagerly build an EXTRA deserializer
-    * lineage on top just to ask for a partition count (ADVICE r10).
-    * No job runs either way. */
-  private def spread(df: DataFrame): DataFrame = {
-    val p = df.sparkSession.sparkContext.defaultParallelism
-    if (df.queryExecution.toRdd.getNumPartitions < p) df.repartition(p)
-    else df
-  }
-
   /** embeddings with L2 norm, via vec_dot(v, v). */
   private def vecs(s: SparkSession, dir: String): DataFrame = {
     VectorFunctions.register(s)
@@ -372,7 +352,8 @@ object Similarity extends graft.QuerySet {
               .stripMargin).as("qq"))
       val w = Window.partitionBy("qid")
         .orderBy(col("rel").desc, col("nid"))
-      val nn = spread(e).join(broadcast(probes), col("vec_id") =!= col("qid"))
+      val nn = Tables.spread(e)
+        .join(broadcast(probes), col("vec_id") =!= col("qid"))
         .select(col("qid"), col("true_label"),
           col("vec_id").as("nid"), col("label").as("nlabel"),
           expr("vec_dot_milli(embedding, qq)").as("rel"))
@@ -458,7 +439,7 @@ object Similarity extends graft.QuerySet {
     // for just the |queries|·pool survivors
     // fused quantize+dot on the corpus side (see MilliVecDot: avoids a
     // per-output-row interpreted transform after CollapseProject)
-    val cands = spread(corpus).join(broadcast(qs),
+    val cands = Tables.spread(corpus).join(broadcast(qs),
         col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id").as("nid"),
         expr("vec_dot_milli(v, qq)").as("rel"))

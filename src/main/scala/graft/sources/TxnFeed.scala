@@ -188,12 +188,14 @@ object TxnFeed {
 
   /** MM/dd/yyyy HH:mm:ss.SSS in UTC (fixed-width 24 h variant of the
     * datagen's %m/%d/%Y %I:%M:%S.%f %p — parseable with one Spark
-    * pattern and reconstructible in oracle SQL). */
+    * pattern and reconstructible in oracle SQL). Immutable and
+    * thread-safe, so built once, not per message. */
+  private val tsFormat = java.time.format.DateTimeFormatter
+    .ofPattern("MM/dd/yyyy HH:mm:ss.SSS")
+    .withZone(java.time.ZoneOffset.UTC)
+
   private def formatTs(ms: Long): String =
-    java.time.format.DateTimeFormatter
-      .ofPattern("MM/dd/yyyy HH:mm:ss.SSS")
-      .withZone(java.time.ZoneOffset.UTC)
-      .format(java.time.Instant.ofEpochMilli(ms))
+    tsFormat.format(java.time.Instant.ofEpochMilli(ms))
 
   val readerFactory: PartitionReaderFactory = new PartitionReaderFactory {
     override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
