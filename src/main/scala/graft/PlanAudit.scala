@@ -7,8 +7,9 @@ import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec, CartesianProductExec, ShuffledHashJoinExec, SortMergeJoinExec}
 
-/** Plan-audit main (PLANS_r3.md producer): executes a representative
-  * query set and tabulates, from each FINAL adaptive physical plan, the
+/** Plan-audit main: executes every SparkEntry query, in name order
+  * (the list is the registry, so coverage cannot drift as operators are
+  * added), and tabulates, from each FINAL adaptive physical plan, the
   * shape facts that matter at 100 TB — whole-stage-codegen span count,
   * shuffle count, join strategy mix, any cartesian/nested-loop joins,
   * and whether parquet scans carry pushed filters. The traversal
@@ -19,75 +20,6 @@ import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNes
   * auditable artifact across the wider surface.
   */
 object PlanAudit {
-
-  /** Round 8: the audit covers EVERY SparkEntry query — the list is
-    * DERIVED from the registry so coverage cannot drift as operators
-    * are added (the round-7 gap was a hand-curated list). The legacy
-    * hand-ordered prefix is kept so historical PLANS_r* rows stay
-    * comparable; the derived remainder follows alphabetically. */
-  private def allAudited: Seq[String] = {
-    val rest = (SparkEntry.queries.keySet -- AUDITED).toSeq.sorted
-    AUDITED ++ rest
-  }
-
-  private val AUDITED = Seq(
-    "s1_scan_project", "p6_like_filter", "j1_join_agg", "j4_semi_having",
-    "a2_agg_having", "w3_rank_topk", "az_asof_join", "sz_sessionize",
-    "dd_minhash_lsh", "dd_simhash", "dd_ngram_jaccard", "dd_embed_cosine",
-    "sim_ivf_topk", "ml_recommend", "pipe_clean_corpus", "xk_topk_custom",
-    "dd_fuzzy_passjoin", "sim_sq_topk", "ts_bm25", "doc_chunk",
-    "pack_sequences", "dd_incremental", "sz_session_window",
-    "t7_hopping_twin",
-    // round-4 additions
-    "dc_decontaminate", "dd_boilerplate", "dd_dup_spans", "dd_semantic",
-    "mix_domains", "vocab_topk", "bpe_pair_counts", "emb_hash_features",
-    "j7_star_join", "cdc_snapshot_diff", "zo_zorder_scan", "mt_compaction",
-    "t8_stream_join_twin", "x_date_spine", "x_stats_agg", "xt_typed_agg",
-    "ta_pii_scan", "s9_orc_ingest", "pipe_training_recipe",
-    "qs_quantile_sketch", "x_islands", "pw_dynamic_overwrite",
-    // round-5 additions
-    "tf_txnfeed_parse", "bf_bloom_prune", "ml_kmeans", "sim_pq_topk",
-    "tr_shard_manifest",
-    // round-5 continuation: training-data additions
-    "dd_lines", "mix_temperature", "ta_quality_classifier", "bpe_encode",
-    "ml_hard_negatives",
-    // round-5 continuation: graph / IR / MV / curation additions
-    "gr_pagerank", "mv_incremental", "tr_dense_ids", "tr_dataset_card",
-    "ta_outliers", "ts_phrase_search", "sim_mmr_topk",
-    // round-5 continuation: sketches / regression / event analytics
-    "cs_countmin_probe", "cs_sketch_merge", "ml_linreg",
-    "ev_funnel", "ev_retention", "ml_confusion", "az_asof_nearest",
-    "ml_power_pc", "sim_ivfpq_topk", "ml_knn_probe", "dd_lsh_tuning",
-    // round-6 additions
-    "sim_index_add", "s11_xml_ingest",
-    "gr_components", "gr_triangles", "er_blocked_match", "er_entities",
-    "dd_containment", "samp_weighted", "ta_code_detect", "tr_curriculum",
-    "gdpr_cascade", "mt_clustering_depth",
-    "tt_asof_read", "pv_k_anonymity", "tc_normalize", "dq_drift_report",
-    "gr_components_incr", "gr_link_predict", "x_locf_fill",
-    "mv_join_delta", "mt_join_profile", "mt_skew_advisor",
-    "mt_file_skipping", "ev_attribution",
-    // round-7 additions
-    "gr_triangles_incr", "mm_decode_meta", "mm_audio_meta",
-    "mm_phash_dedup",
-    "er_jaro_winkler", "sky_pareto", "sky_pareto_brand",
-    "tm_ewma", "tm_ohlc", "dq_expect_suite", "dq_referential",
-    "gr_ppr", "ta_bigram_lm", "sim_matryoshka", "gr_kcore",
-    // round-7 continuation: hierarchy / density / interval / sketch /
-    // privacy / BFS additions
-    "hr_tree_rollup", "db_dbscan_grid", "iv_interval_join",
-    "cs_kmv_intersect", "pv_t_closeness", "gr_bfs_dist",
-    "gr_sssp_bounded", "dq_profile", "er_mutual_best", "tm_backtest",
-    "hr_bom_explode", "ev_segment_overlap", "ev_seq_patterns",
-    "geo_point_in_poly", "ts_proximity", "x_key_gaps",
-    // round-7 continuation: pattern matching / eval / decomposition /
-    // disclosure control
-    "ev_match_recognize", "ml_auc_roc", "ml_stump", "tm_seasonal",
-    "ta_readability", "pv_cell_suppression",
-    "t10_cep_twin", "x_bitmap_distinct", "x_interpolate",
-    "dq_mad_outliers", "tm_holt", "iv_time_weighted", "mb_assoc_rules",
-    "gr_label_spread", "ev_window_funnel", "dc_fuzzy_decontaminate",
-    "ev_rfm")
 
   private final case class Stats(var codegen: Int = 0, var shuffles: Int = 0,
                                  var bhj: Int = 0, var smj: Int = 0,
@@ -130,11 +62,11 @@ object PlanAudit {
 
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val out = if (args.nonEmpty) args(0) else "PLANS_r8.md"
+    val out = if (args.nonEmpty) args(0) else "PLANS.md"
     val spark = Sessions.local(8)
     spark.sparkContext.setLogLevel("ERROR")
 
-    val rows = allAudited.map { name =>
+    val rows = SparkEntry.queries.keySet.toSeq.sorted.map { name =>
       val df = SparkEntry.queries(name)(spark, dir)
       // execute THIS QueryExecution (count() would plan a new one and
       // leave this plan un-finalized, pre-codegen)
@@ -182,9 +114,8 @@ object PlanAudit {
       "pv_t_closeness (the same 1-row statistic shape) " +
       "(each asserted broadcast-bounded in PlanInvariantSpec or scalar " +
       "by construction).\n" +
-      "The round-8 full-surface extension (105 newly audited queries) " +
-      "introduces no new nested-loop class — every new entry is the " +
-      "same broadcast-scalar shape: dq_referential's six FK edges each " +
+      "Every other nested-loop entry is the same broadcast-scalar " +
+      "shape: dq_referential's six FK edges each " +
       "cross one-row orphan/child count scalars, dq_benford's " +
       "digit-total scalar, ml_weak_nb's class-prior/vocab-size " +
       "one-rowers, the NQ-row broadcast query batches of ml_knn_probe / " +
@@ -201,7 +132,7 @@ object PlanAudit {
       "unconditioned, twice per match-table leg → the 4-entry rows), " +
       "and ev_bot_rank's one-row doubled-median scalar " +
       "(Diagnostics.scala — explicit broadcast).\n" +
-      "Round-10 extension: tr_dsir_select's one nested-loop entry is " +
+      "tr_dsir_select's one nested-loop entry is " +
       "its ONE-ROW smoothing-totals scalar (tt/tr/bb — " +
       "CorpusPrep.dsirSelectOf's broadcast consts crossJoin); its two " +
       "shuffle-join entries are BOTH the bucket-grain FULL-OUTER count " +

@@ -4,7 +4,7 @@ import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Scale soak for the dedup/similarity family (SCALE_r3.md producer):
+/** Scale soak for the dedup/similarity family (docs/findings.md):
   * measures, at 10× the bench corpus, what the plan audits only argue —
   * that candidate generation stays sub-quadratic and runtimes stay
   * near-linear.
@@ -838,7 +838,7 @@ object Soak {
       // behind the 3.5× threshold AND the documented negative result
       // (on replica-dense corpora the per-query gain is NOT separable
       // by any ADC margin: gain and no-gain ratio distributions
-      // overlap; see SCALE_r14.md)
+      // overlap; see docs/findings.md)
       locally {
         val (ranked, _, _) = operators.IvfPq.adcRanked(
           emb.filter(col("vec_id") < 10), emb, 4, idx, opq = false)

@@ -374,10 +374,10 @@ object Dedup extends graft.QuerySet {
     * ns ≥ nl/2) and rank ≤ ns − O + 1 ≤ ns − ⌈2ns/3⌉ + 1 in s
     * (O ≥ 2ns/3 via nl ≥ ns) — one element inside BOTH joined
     * prefixes. The indexing side shrinking from n/2 to n/3 cuts the
-    * prefix-join collision volume AND the surviving candidate pairs
-    * (measured in SCALE_r11; the DuckDB oracle keeps its symmetric
-    * candidate pipeline — candidate sets may differ, the exact
-    * J-filter makes the final rows identical).
+    * prefix-join collision volume; the surviving candidate pairs rise
+    * ~3 % (measured in docs/findings.md; the DuckDB oracle keeps its
+    * symmetric candidate pipeline — candidate sets may differ, the
+    * exact J-filter makes the final rows identical).
     *
     * The POSITIONAL bound prunes weakly-overlapping pairs before the
     * expensive intersection join and stays sound under asymmetric

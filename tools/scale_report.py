@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Roll the Soak JSONL output into SCALE_rN.md.
+"""Roll the Soak JSONL output into a markdown scale report.
 
 Usage: python3 tools/scale_report.py OUT.md base_and_x10.log x30.log
 
