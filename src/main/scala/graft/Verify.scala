@@ -1,7 +1,16 @@
 package graft
+import java.lang.management.ManagementFactory
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. Its last
+  * stderr line counts the run's Janino compiles: one per codegen cache
+  * miss, so with a cache that never evicts it is the number of distinct
+  * generated sources the dumped queries need. The milliseconds are
+  * `CodeGenerator.compileTime`, an exact sum; Spark's compile-time
+  * histogram keeps only a sample. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
@@ -42,5 +51,11 @@ object Verify {
       }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    val metaspaceMb = ManagementFactory.getMemoryPoolMXBeans.asScala
+      .find(_.getName == "Metaspace").fold(0L)(_.getUsage.getUsed) >> 20
+    System.err.println(
+      s"[verify] codegen: ${CodegenMetrics.METRIC_COMPILATION_TIME.getCount}" +
+        s" compiles, ${CodeGenerator.compileTime / 1000000} ms," +
+        s" metaspace $metaspaceMb MB")
   }
 }
