@@ -14,13 +14,15 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // optional 3rd arg: comma-separated name filter for fast iteration
+    // optional 3rd arg: comma-separated name filter; it scopes both the
+    // dumps and oracle_sql.json, so tools/check.py checks exactly them
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
+    def kept(name: String): Boolean = only.forall(_.contains(name))
     val spark = Sessions.local(Sessions.cpus(4))
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .filter { case (name, _) => kept(name) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
@@ -46,6 +48,7 @@ object Verify {
     // {SFDIR} placeholders (file-catalog oracles) resolve to the dir this
     // dump actually ran against, so oracles track the scale factor.
     val json = SparkEntry.oracleSql
+      .filter { case (name, _) => kept(name) }
       .map { case (k, v) =>
         s"${q(k)}: ${q(v.replace("{SFDIR}", sfDir))}"
       }.mkString("{", ",", "}")

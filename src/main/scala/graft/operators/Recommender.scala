@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.ml.feature.{BucketedRandomProjectionLSH, HashingTF, IDF, Normalizer, Tokenizer}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -16,7 +16,13 @@ import graft.Tables
   *    rational idf weights ((N+1)/(df+1) — no transcendental functions,
   *    so the DuckDB oracle reproduces scores deterministically).
   *    Candidate pairs are blocked by brand (the reference's per-category
-  *    restriction), keeping the similarity join sub-quadratic.
+  *    restriction). Cosine is computed at name grain and broadcast; the
+  *    purchases then take ONE shuffle, by customer, and each customer
+  *    is ranked inside its partition as a bounded top-k (a heap, no
+  *    sort) under an exact score bound θ:
+  *      1. each unbought part of an owned class (brand, n) scores ≥ s(n, n);
+  *      2. so with ≥ TOPK such parts, the k-th best score is ≥ θ = min s(n, n);
+  *      3. a name pair scoring < θ cannot rank and is never joined.
   *
   *  - `ml_lsh_pipeline`: the Spark ML scale path — Tokenizer →
   *    HashingTF → IDF → L2 Normalizer → seeded
@@ -43,144 +49,105 @@ object Recommender extends graft.QuerySet {
       val li = Tables(s, dir, "lineitem")
       val part = Tables(s, dir, "part")
 
-      // M-qualification: customers with enough purchase history (A2).
-      val quals = orders.groupBy("o_custkey")
-        .agg(count(lit(1)).as("n_ord")).filter(col("n_ord") >= MIN_ORDERS)
-        .select("o_custkey")
-      val purch = li
-        .join(orders, li("l_orderkey") === orders("o_orderkey"))
-        .join(broadcast(quals), "o_custkey")
-        .select(col("o_custkey").as("cust"), col("l_partkey").as("part"))
-        .distinct()
-        .cache() // reused: name lift, purchase counts, final anti-join
-
-      // M3/M4: similarity is a function of NAMES only (parts sharing a
-      // name have identical vectors), so it is computed at name level —
-      // a constant-size table (64 names at every sf) instead of the
-      // per-part n² matrix. Weights stay part-level ((N+1)/(df+1) with
-      // df counted over parts) so scores equal the per-part formulation
-      // exactly; the DuckDB oracle computes the naive per-part version
-      // and hash-matches. Names are carried as integer codes (min
-      // partkey per name — deterministic, data-derived) through every
-      // wide shuffle: a TPC-H p_name is ~35 chars, the code is 8 bytes,
-      // and the multi-million-row class table is keyed by it.
-      val pname0 = part.select(col("p_partkey"), col("p_brand"), col("p_name"))
-      // ONE name-grain aggregate supplies the integer name code AND the
-      // per-name part count: parts sharing a name have identical term
-      // sets, so df(term) = Σ over names containing the term of that
-      // name's part count, and n_parts = Σ of all name sizes — the
-      // part-level (p_partkey, term) explode + distinct + groupBy this
-      // replaces was a part-scale exchange recomputing what the name
-      // table already knows (guide §2.3: shuffle name-grain metadata,
-      // not part-grain rows). Values are exact, not approximate: the
-      // same integers the per-part formulation yields, oracle unchanged.
-      val nameKey = pname0.groupBy("p_name")
-        .agg(min(col("p_partkey")).as("nid"),
-          count(lit(1)).as("n_in_name"))
-        .cache()
-      val pname = pname0.join(broadcast(nameKey), "p_name")
-        .select(col("p_partkey"), col("p_brand"), col("nid"))
-        .cache()
-      val stats = nameKey.agg(sum(col("n_in_name")).as("n_parts"))
-      val nterms = nameKey.select(col("nid"), col("n_in_name"),
-          explode(split(col("p_name"), " ")).as("term"))
-        .dropDuplicates("nid", "term")
-      val dfreq = nterms.groupBy("term").agg(sum("n_in_name").as("df"))
-      val ntw = nterms.select(col("nid"), col("term"))
-        .join(broadcast(dfreq), "term")
-        .crossJoin(broadcast(stats))
-        .select(col("nid"), col("term"),
+      // M3/M4 at name grain: parts sharing a name have identical term
+      // sets, so cosine is a function of the two names (64 names at
+      // every sf). The weights (N+1)/(df+1), with df and N counted over
+      // parts, are rational, with no logarithm, so the DuckDB oracle's
+      // naive per-part formulation reproduces every score exactly.
+      def terms(names: Column) = explode(array_distinct(split(names, " ")))
+      val tw = part.select(terms(col("p_name")).as("term"))
+        .groupBy("term").agg(count(lit(1)).as("df"))
+        .crossJoin(broadcast(part.agg(count(lit(1)).as("n_parts"))))
+        .select(col("term"),
           ((col("n_parts") + lit(1.0)) / (col("df") + lit(1.0))).as("w"))
-        .cache()
-      val nnrm = ntw.groupBy("nid")
-        .agg(sqrt(sum(col("w") * col("w"))).as("nrm"))
-      val na = ntw.toDF("aid", "term", "wa")
-        .join(nnrm.toDF("aid", "nrm_a"), "aid")
-      val nb = ntw.toDF("bid", "term", "wb")
-        .join(nnrm.toDF("bid", "nrm_b"), "bid")
-      val nsim = na.join(nb, Seq("term"))
+      // One row per (name, term) with the name's norm: the vector is
+      // built by one aggregate in the name partitioning, so the pair
+      // join below needs no exchange and sums in a fixed term order.
+      val nvec = part.select(col("p_name")).distinct()
+        .select(col("p_name"), terms(col("p_name")).as("term"))
+        .join(broadcast(tw), "term")
+        .groupBy("p_name")
+        .agg(collect_list(struct(col("term"), col("w"))).as("v"),
+          sqrt(sum(col("w") * col("w"))).as("nrm"))
+        .select(col("p_name"), col("nrm"), explode(col("v")).as("tw"))
+        .select(col("p_name"), col("tw.term").as("term"), col("tw.w").as("w"),
+          col("nrm"))
+      val nsim = nvec.toDF("aid", "term", "wa", "nrm_a")
+        .join(broadcast(nvec.toDF("bid", "term", "wb", "nrm_b")), "term")
         .groupBy(col("aid"), col("bid"), col("nrm_a"), col("nrm_b"))
         .agg(sum(col("wa") * col("wb")).as("dot"))
         .select(col("aid"), col("bid"),
           (col("dot") / (col("nrm_a") * col("nrm_b"))).as("s"))
 
-      // Purchases lifted to name level; ONE aggregate supplies both the
-      // distinct purchased classes (its keys) and the per-customer
-      // purchase counts used for the avail computation.
-      val purchParts = purch
-        .join(broadcast(pname), purch("part") === pname("p_partkey"))
-        .select(col("cust"), col("p_brand"), col("nid"), col("part"))
-      val purchAgg = purchParts.groupBy("cust", "p_brand", "nid")
-        .agg(count(lit(1)).as("pcnt"))
-        .cache()
-      val classScores = purchAgg
-        .join(broadcast(nsim), purchAgg("nid") === nsim("aid"))
-        .groupBy(col("cust"), col("p_brand"), col("bid"))
-        .agg(max(col("s")).as("score"))
-      val gsize = pname.groupBy("p_brand", "nid")
-        .agg(count(lit(1)).as("gsize"))
-      // avail = unpurchased parts in this (brand, name) class for this
-      // customer. The self-name class (bid == a purchased name) is
-      // reachable via nsim(a, a) = 1 and is valid exactly when avail>0 —
-      // i.e., some OTHER part with the same name exists, matching the
-      // p≠q condition of the naive formulation.
-      val classes = classScores
-        .join(broadcast(gsize),
-          classScores("p_brand") === gsize("p_brand") &&
-            classScores("bid") === gsize("nid"))
-        .drop(gsize("p_brand")).drop(gsize("nid"))
-        .join(purchAgg.toDF("cust", "p_brand", "bid", "pcnt"),
-          Seq("cust", "p_brand", "bid"), "left")
-        .na.fill(0L, Seq("pcnt"))
-        .withColumn("avail", col("gsize") - col("pcnt"))
-        .filter(col("avail") > 0)
-      // Keep a class iff fewer than TOPK parts are available in classes
-      // with STRICTLY higher score (ties must all survive — equal-score
-      // classes interleave by part id in the final ranking). Both frames
-      // share one partitioning and ordering, so Spark evaluates them in
-      // a single WindowExec over a single sort: cum-including-peers
-      // minus the peer-group sum (RANGE CURRENT ROW..CURRENT ROW = the
-      // tie group) is the strictly-higher total. A threshold-based
-      // pre-prune (score ≥ k-th distinct score) was measured
-      // NET-NEGATIVE here: the extra pass over the class table costs
-      // more than the window sort it saves at this row count.
-      val wOrd = Window.partitionBy("cust").orderBy(col("score").desc)
-      val kept = classes
-        .withColumn("cumInclPeers", sum(col("avail")).over(
-          wOrd.rangeBetween(Window.unboundedPreceding, Window.currentRow)))
-        .withColumn("peerSum", sum(col("avail")).over(
-          wOrd.rangeBetween(Window.currentRow, Window.currentRow)))
-        .filter(col("cumInclPeers") - col("peerSum") < TOPK)
+      // A class is one (brand, name): its parts share every score, so a
+      // customer ranks classes and expands only the survivors to parts.
+      // Only a class's (pcnt + TOPK) smallest part ids can rank: the
+      // final order breaks score ties by part id, and at most pcnt of
+      // them are bought, so TOPK unbought class-mates beat every larger
+      // one.
+      val wClass = Window.partitionBy("p_brand", "p_name").orderBy("p_partkey")
+      val pclass = part.select(col("p_partkey"), col("p_brand"), col("p_name"),
+        row_number().over(wClass).as("crn"),
+        count(lit(1)).over(wClass.rowsBetween(Window.unboundedPreceding,
+          Window.unboundedFollowing)).as("gsize"))
+      val pname = pclass.select(col("p_partkey"), col("p_brand"),
+        col("p_name"), col("gsize"))
+      val pnameRanked = pclass.select(col("p_partkey").as("q"), col("p_brand"),
+        col("p_name").as("bid"), col("crn"))
 
-      // Expand the surviving classes to parts, drop purchased, exact
-      // top-k per customer (M5+M6).
-      // EXACT expansion cap: within a (brand, name) class every part
-      // shares the class score, and the final ranking tie-breaks by
-      // part id ASCENDING — so only a class's (pcnt + TOPK) smallest
-      // part ids can ever reach a customer's top-k (at most pcnt of
-      // them are purchased, leaving ≥ TOPK unpurchased candidates
-      // that dominate every larger class-mate). Expanding the full
-      // class shuffled the whole catalog-grain fan-out (measured:
-      // 70 MB exchange + 60 MB anti-join at sf0.1) to keep 3 rows per
-      // customer; the cap shrinks the anti-join input to
-      // Σ(pcnt + TOPK) rows with bit-identical output.
-      val wClass = Window.partitionBy("p_brand", "nid")
-        .orderBy("p_partkey")
-      val pnameRanked = pname
-        .withColumn("crn", row_number().over(wClass))
-        .select(col("p_partkey").as("q"), col("p_brand"),
-          col("nid").as("bid"), col("crn"))
-      val expanded = kept
+      // M1: qualified customers' purchases, shuffled ONCE by customer
+      // range; every step below runs inside those partitions, and the
+      // range also satisfies the final ORDER BY, so the answer needs no
+      // second exchange. The partition count is pinned because AQE
+      // coalesces by bytes: the 16-byte rows fan out to every name pair
+      // below, and coalesced they ran as one task. One aggregate lifts
+      // the purchases to classes and keeps the bought parts.
+      val quals = orders.groupBy("o_custkey")
+        .agg(count(lit(1)).as("n_ord")).filter(col("n_ord") >= MIN_ORDERS)
+        .select("o_custkey")
+      val owned = li
+        .join(orders, li("l_orderkey") === orders("o_orderkey"))
+        .join(broadcast(quals), "o_custkey")
+        .select(col("o_custkey").as("cust"), col("l_partkey").as("part"))
+        .repartitionByRange(
+          s.conf.get("spark.sql.shuffle.partitions").toInt, col("cust"))
+        .join(broadcast(pname), col("part") === col("p_partkey"))
+        .groupBy("cust", "p_brand", "p_name", "gsize")
+        .agg(collect_set(col("part")).as("bought"))
+        .withColumn("free", col("gsize") - size(col("bought")))
+
+      // The bound θ (scaladoc): only when the owned classes hold TOPK
+      // unbought parts, else −∞. Ties at θ survive (`>=`). A class's own
+      // pair is always kept, whatever its score: it carries the bought
+      // parts of a bought-out class that a cross pair may still reach.
+      // The self scores come from the same nsim, so θ and the scores it
+      // bounds are the same doubles.
+      val selfSim = nsim.groupBy("aid")
+        .agg(max(when(col("aid") === col("bid"), col("s"))).as("self"))
+      val perCust = Window.partitionBy("cust")
+      val self = col("p_name") === col("bid")
+      val classes = owned
+        .join(broadcast(selfSim), col("p_name") === col("aid"))
+        .withColumn("theta",
+          when(sum(col("free")).over(perCust) >= TOPK,
+            min(when(col("free") > 0, col("self"))).over(perCust)))
+        .drop("aid")
+        .join(broadcast(nsim), col("p_name") === col("aid"))
+        .filter(self || col("theta").isNull || col("s") >= col("theta"))
+        .groupBy("cust", "p_brand", "bid")
+        .agg(max(col("s")).as("score"),
+          flatten(collect_list(when(self, col("bought")))).as("bought"))
+
+      // M5/M6: expand, drop bought parts, bounded top-k per customer.
+      val cands = classes
         .join(broadcast(pnameRanked), Seq("p_brand", "bid"))
-        .filter(col("crn") <= col("pcnt") + TOPK)
+        .filter(col("crn") <= size(col("bought")) + TOPK &&
+          !array_contains(col("bought"), col("q")))
         .select(col("cust"), col("q"), col("score"))
-        .join(purch.toDF("cust", "q"), Seq("cust", "q"), "left_anti")
-      val w = Window.partitionBy("cust")
-        .orderBy(col("score").desc, col("q"))
-      expanded.withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= TOPK)
+      graft.plans.TopK.perGroup(cands, Seq("cust"),
+          Seq("score" -> true, "q" -> false), TOPK)
+        .orderBy(col("cust"), col("score").desc, col("q"))
         .select(col("cust"), col("q").as("part"))
-        .orderBy("cust", "rn")
     }),
 
     // Spark ML pipeline + LSH approximate similarity join (seeded).

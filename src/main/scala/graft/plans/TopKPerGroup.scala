@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Expression, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
-import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution}
+import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 
 /** Whole-operator Catalyst extension (the (c) route of SURVEY.md §7):
@@ -37,6 +37,10 @@ final case class TopKPerGroupExec(groupExprs: Seq[Expression],
 
   override def requiredChildDistribution: Seq[Distribution] =
     ClusteredDistribution(groupExprs) :: Nil
+
+  // rows never move between partitions, so a range-partitioned child
+  // still satisfies a later ORDER BY on the group keys without a shuffle
+  override def outputPartitioning: Partitioning = child.outputPartitioning
 
   override protected def doExecute(): RDD[InternalRow] = {
     val childOutput = child.output

@@ -320,4 +320,56 @@ class PlanInvariantSpec extends SparkSpec {
       graft.operators.Curation.queries("pv_l_diversity"))
     assert(!plan.contains("Join"), plan)
   }
+
+  test("ml_recommend: one customer shuffle feeds a heap top-k; no score " +
+      "sort, no theta join, no extra part-grain broadcast") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, BROADCAST, ResolvedHint}
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    import graft.plans.TopKPerGroupExec
+    val df = graft.operators.Recommender.queries("ml_recommend")(spark, sf)
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    assert(!plan.toString.contains("CartesianProduct"), plan)
+    val topk = plan.collect { case t: TopKPerGroupExec => t }
+    assert(topk.size == 1, plan)
+    // windows rank parts by id and bound theta per customer; none sorts
+    // by a score
+    plan.collect { case w: WindowExec => w }.foreach { w =>
+      val keys = w.orderSpec.flatMap(_.references).map(_.name)
+      assert(!keys.exists(Set("s", "score")), w)
+    }
+    // the name-grain subtree is planned once per use (AQE reuses its
+    // stages), so count distinct joins
+    val bnlj = plan.collect { case j: BroadcastNestedLoopJoinExec => j }
+    assert(bnlj.map(_.canonicalized).distinct.size == 1, plan)
+    assert(bnlj.head.right.output.map(_.name) == Seq("n_parts"), plan)
+    // the first shuffles under the top-k, not counting broadcast builds:
+    // exactly one, the customer shuffle, so the class table never moves
+    def streamed(p: SparkPlan): Seq[ShuffleExchangeExec] = p match {
+      case _: BroadcastExchangeExec => Nil
+      case e: ShuffleExchangeExec => Seq(e)
+      case other => other.children.flatMap(streamed)
+    }
+    val shuffles = streamed(topk.head.child)
+    assert(shuffles.size == 1, plan)
+    val keys = shuffles.head.outputPartitioning match {
+      case e: org.apache.spark.sql.catalyst.expressions.Expression =>
+        e.references.map(_.name).toSet
+      case _ => Set.empty[String]
+    }
+    assert(keys == Set("cust"), plan)
+    // part-grain relations (no aggregate under the hint) broadcast at most
+    // twice: the part -> class lift and the class -> part expansion
+    val partGrain = df.queryExecution.analyzed.collect {
+      case h: ResolvedHint if h.hints.strategy.contains(BROADCAST) &&
+        h.child.collectFirst { case a: Aggregate => a }.isEmpty => h
+    }
+    assert(partGrain.size <= 2, partGrain.mkString("\n"))
+  }
 }

@@ -6,6 +6,8 @@ Usage: python3 tools/check.py <verify_out_dir> <sf_dir>
 Reads each <out>/<name>/ parquet dump (written by graft.Verify), runs the
 matching oracle SQL from <out>/oracle_sql.json in DuckDB over the sf_dir
 parquet tables, and compares row-by-row (column order normalized by name).
+A Verify run with a name filter writes only those names' oracles, so the
+check covers exactly the filtered dump.
 Numeric values compare exactly after float64 coercion; everything else
 compares as strings. NOT part of the shipped library — dev tooling only.
 """
