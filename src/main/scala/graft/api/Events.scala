@@ -40,9 +40,7 @@ object Events {
     * `PERMUTE(A, B, …)` any-order form. Delegates to
     * the path behind the oracle-checked `t10_cep_twin` /
     * `ev_match_recognize`; the same engine runs incrementally with
-    * checkpointed per-key state in streaming.CepPattern (any
-    * terminator-disjoint pattern) and streaming.CepMatcher (the
-    * funnel's one-bit DFA).
+    * checkpointed per-key state in streaming.CepPattern.
     *
     * MEMORY CONTRACT (bounded for EVERY pattern this accepts): one
     * entity-keyed shuffle; per-entity state is the RowPattern
@@ -645,14 +643,6 @@ object Events {
       spark, events, components, skip, idCol, tieCol, orderCol,
       measureCol, allowedLatenessUs, onLate, maxBufferedEvents)(classify)
 
-  /** Streaming twin of [[matchRowsSkipBy]] (round 12 — streaming
-    * labeled ALL ROWS for skip-mode patterns): when a match confirms,
-    * every covered row emits with its pattern-variable label —
-    * (user_id, match_seq, ord_in_match, id, var_name) — exactly once;
-    * under an overlapping skip a shared row re-emits once per match it
-    * participates in, with that match's ordinal. Classification inside
-    * the checkpointed state; restart-twin-pinned against the batch
-    * fold in CepPatternSpec. */
   /** Streaming twin of [[matchRowsRunningBy]] (round 13 — streaming
     * ALL ROWS with RUNNING/FINAL measures, the last batch-only
     * MEASURES leg): when a match confirms, every covered row emits as
@@ -683,6 +673,14 @@ object Events {
       spark, events, pattern, idCol, tieCol, orderCol, measureCol,
       allowedLatenessUs, onLate, maxBufferedEvents)(classify)
 
+  /** Streaming twin of [[matchRowsSkipBy]] (round 12 — streaming
+    * labeled ALL ROWS for skip-mode patterns): when a match confirms,
+    * every covered row emits with its pattern-variable label —
+    * (user_id, match_seq, ord_in_match, id, var_name) — exactly once;
+    * under an overlapping skip a shared row re-emits once per match it
+    * participates in, with that match's ordinal. Classification inside
+    * the checkpointed state; restart-twin-pinned against the batch
+    * fold in CepPatternSpec. */
   def matchRowsSkipStreamBy(spark: org.apache.spark.sql.SparkSession,
                             events: DataFrame,
                             components: Seq[(String, String)],

@@ -24,9 +24,9 @@ import org.apache.spark.sql.types.StructType
   * sequence trigrams (`ev_seq_patterns`) — all oracle-checked, each
   * parity-pinned against the window form it replaced (EventFoldSpec).
   * The streaming twin of this primitive is `flatMapGroupsWithState`
-  * (streaming/CepPattern carries the RowPattern machine itself;
-  * streaming/CepMatcher is the funnel DFA) — same key shuffle, same
-  * per-entity state, checkpointed.
+  * (streaming/CepPattern carries the same functions.RowMatcher state
+  * the MATCH_RECOGNIZE folds run) — same key shuffle, same per-entity
+  * state, checkpointed.
   *
   * Key and order columns are arbitrary (keys ride through as opaque
   * Rows, so any key type works and survives to the output unchanged);

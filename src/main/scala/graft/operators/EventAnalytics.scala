@@ -2,7 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType}
 import graft.Tables
+import graft.functions.{RowMatcher, RowPattern}
 
 /** Product-analytics operators over the events stream — the two
   * questions every event warehouse answers daily, expressed as exact
@@ -606,847 +608,289 @@ object EventAnalytics extends graft.QuerySet {
           .when(col("event_type") === "purchase", "p")
           .otherwise("o").as("code"))
 
+  /** Fold a row-pattern matcher (functions.RowMatcher) over each
+    * entity's rows in `orderCols` order: one entity-keyed shuffle with a
+    * secondary sort, emission streaming out as matches confirm, and the
+    * matcher's state — the engine, the PREV row, the match ordinal — the
+    * only per-entity memory, never the entity's history. Every
+    * MATCH_RECOGNIZE output mode below is this fold over one matcher;
+    * streaming/CepPattern runs the same matchers as checkpointed state. */
+  private def matchFold[E](ev: DataFrame, keyCols: Seq[String],
+                           orderCols: Seq[String],
+                           m: RowMatcher.Matcher[E]): DataFrame =
+    graft.api.Folds.flatFoldOrdered(ev, keyCols, orderCols, m.fields)(
+      () => m.init())(m.feed)(m.finish)
+
+  /** The code-column folds' input, (user_id, us, event_id, code[, v]),
+    * ordered by (us, event_id); a code may carry several chars in count
+    * mode and exactly one elsewhere, and a NULL code skips its event. */
+  private def codedFold[E](ev: DataFrame)(
+      m: RowMatcher.Cols => RowMatcher.Matcher[E]): DataFrame = {
+    val n = ev.columns.length
+    matchFold(ev.toDF(Seq("user_id", "us", "event_id", "code", "v")
+      .take(n): _*), Seq("user_id"), Seq("us", "event_id"),
+      m(RowMatcher.Cols(us = 1, id = 2, code = 3, v = if (n > 4) 4 else -1)))
+  }
+
+  /** Column positions for the classifier folds: ids from `idCol`, the
+    * measure (if any) from `measureCol`; no order micros. */
+  private def classified(ev: DataFrame, idCol: String,
+                         measureCol: String = null): RowMatcher.Cols =
+    RowMatcher.Cols(id = ev.schema.fieldIndex(idCol),
+      v = if (measureCol == null) -1 else ev.schema.fieldIndex(measureCol))
+
+  private def keyed(df: DataFrame, keyCols: Seq[String],
+                    cols: org.apache.spark.sql.Column*): DataFrame =
+    df.select(keyCols.map(col) ++ cols: _*)
+
   /** Per-entity row-pattern match counts — the MATCH_RECOGNIZE core
     * behind ev_match_recognize / t10_cep_twin / api.Events
-    * .matchPattern: counts the regex's leftmost / non-overlapping /
-    * greedy matches (exact `Matcher.find()` semantics, pinned by
-    * RowPatternSpec) by FOLDING the functions.RowPattern machine over
-    * each entity's events in (us, tie) order — one entity-keyed
-    * shuffle with a secondary sort, per-entity state the speculation
-    * chain, never the trace: O(|pattern|) for terminator-disjoint
-    * patterns like the funnel shipped here (proven by construction —
-    * see RowPattern.terminatorDisjoint), ≤ depthCap×O(|pattern|) with
-    * loud failure past the cap for arbitrary caller patterns. The
-    * previous formulation (collect_list → array_join → regexp)
-    * materialized each entity's full history as one string — an
-    * unbounded aggregation buffer on a hyperactive entity (10⁹-event
-    * bot = multi-GB in one buffer); the fold is the batch twin of
-    * streaming/CepPattern's checkpointed per-key machine (and of
-    * CepMatcher's funnel DFA). EventFoldSpec pins the hot-entity
-    * bound; multi-char / null codes keep the old concat semantics
-    * (chars fed in order, nulls skipped). */
+    * .matchPattern: the regex's leftmost / non-overlapping / greedy
+    * matches (exact `Matcher.find()` semantics, pinned by
+    * RowPatternSpec), counted by folding the RowPattern speculation
+    * chain over each entity's events in (us, tie) order. State is
+    * O(|pattern|) for terminator-disjoint patterns like the funnel
+    * (proven by construction — RowPattern.terminatorDisjoint), and
+    * ≤ depthCap×O(|pattern|) with loud failure past the cap otherwise;
+    * EventFoldSpec pins the hot-entity bound. Multi-char codes feed
+    * their chars in order and NULL codes are skipped, as the trace
+    * concatenation the oracle mirrors would. */
   private[graft] def matchCountsOf(ev: DataFrame, pattern: String,
-                                   depthCap: Int = 4096): DataFrame = {
-    val prog = graft.functions.RowPattern.compile(pattern)
-    graft.api.Folds.foldOrdered(
-      ev.toDF("user_id", "us", "event_id", "code"),
-      keyCols = Seq("user_id"), orderCols = Seq("us", "event_id"),
-      out = new org.apache.spark.sql.types.StructType()
-        .add("n_matches", org.apache.spark.sql.types.LongType))(
-      () => new graft.functions.RowPattern.MatchCounter(prog, depthCap))(
-      (m, r) => {
-        val code = r.getString(3)
-        if (code != null) m.feedAll(code)
-        m
-      })(
-      m => Seq(java.lang.Long.valueOf(m.finish())))
-  }
+                                   depthCap: Int = 4096): DataFrame =
+    codedFold(ev)(new RowMatcher.Counts(pattern, depthCap, _))
 
-  /** Per-entity row-pattern match SPANS (ONE ROW PER MATCH) — the
-    * general engine behind ev_match_spans / api.Events.matchSpans:
-    * same ordered fold as matchCountsOf, but the machine runs in span
-    * mode and each confirmed match emits (start_us, start_event_id,
-    * end_us, end_event_id). Requires a terminator-disjoint pattern
-    * (loud failure otherwise — the span buffers and the
-    * position→event ring below are only bounded under that contract)
-    * and exactly ONE code char per event. The ring holds only events
-    * at positions ≥ the machine's minLivePos (attempt starts, pending
-    * starts, buffered span starts — monotone, so the ring front-drops
-    * in O(1) amortized): per-entity memory is O(|pattern| + longest
-    * live match), never the history. */
+  /** Per-entity row-pattern match SPANS (ONE ROW PER MATCH) — behind
+    * ev_match_spans / api.Events.matchSpans: each confirmed match as
+    * (start_us, start_event_id, end_us, end_event_id). Needs a
+    * terminator-disjoint pattern (loud failure otherwise) and exactly
+    * one code char per event; per-entity memory is O(|pattern| +
+    * longest live match) — the ring keeps only events at or past the
+    * machine's minLivePos. */
   private[graft] def matchSpansOf(ev: DataFrame,
-                                  pattern: String): DataFrame = {
-    val prog = graft.functions.RowPattern.compile(pattern)
-    require(graft.functions.RowPattern.terminatorDisjoint(prog),
-      s"ONE ROW PER MATCH needs a terminator-disjoint pattern; " +
-        s"'$pattern' is not — use match counting (matchCountsOf)")
-    final class St {
-      val ring = new graft.functions.RowPattern.SpanRing[(Long, Long)](
-        new graft.functions.RowPattern.MatchCounter(prog, trackSpans = true))
-      def row(sp: (Long, Long)): Seq[Any] = {
-        val (sus, sid) = ring.first(sp)
-        val (eus, eid) = ring.last(sp)
-        Seq(Long.box(sus), Long.box(sid), Long.box(eus), Long.box(eid))
-      }
-    }
-    graft.api.Folds.flatFoldOrdered(
-      ev.toDF("user_id", "us", "event_id", "code"),
-      keyCols = Seq("user_id"), orderCols = Seq("us", "event_id"),
-      out = new org.apache.spark.sql.types.StructType()
-        .add("start_us", org.apache.spark.sql.types.LongType)
-        .add("start_event_id", org.apache.spark.sql.types.LongType)
-        .add("end_us", org.apache.spark.sql.types.LongType)
-        .add("end_event_id", org.apache.spark.sql.types.LongType))(
-      () => new St)(
-      (st, r) => {
-        val code = r.getString(3)
-        if (code == null) Nil
-        else {
-          require(code.length == 1,
-            "span mode needs exactly one code char per event")
-          val out = st.ring.feed((r.getLong(1), r.getLong(2)),
-            code.charAt(0)).map(st.row)
-          st.ring.prune()
-          out
-        }
-      })(
-      st => st.ring.finishSpans().map(st.row))
+                                  pattern: String): DataFrame =
+    codedFold(ev)(new RowMatcher.Spans(pattern, _, RowMatcher.PerMatch))
+      .select("user_id", "start_us", "start_event_id", "end_us",
+        "end_event_id")
+
+  /** Per-entity row-pattern match ROWS (ALL ROWS PER MATCH) — behind
+    * ev_match_rows / api.Events.matchRows: every event of each
+    * confirmed match as (match_seq, ord_in_match, us, event_id, code),
+    * match_seq numbering the entity's matches in start order (the
+    * span machine's prepend-merge) and ord_in_match the events inside
+    * the match. Same contract and bounds as [[matchSpansOf]]. */
+  private[graft] def matchRowsOf(ev: DataFrame,
+                                 pattern: String): DataFrame =
+    codedFold(ev)(new RowMatcher.Spans(pattern, _, RowMatcher.AllRows))
+      .select(col("user_id"), col("match_seq"), col("ord_in_match"),
+        col("us"), col("id").as("event_id"), col("cls").as("code"))
+
+  /** Row-pattern MEASURES (ONE ROW PER MATCH) — behind
+    * ev_match_measures / api.Events.matchMeasures: per confirmed match
+    * (match_seq, start_us, start_event_id, end_us, end_event_id,
+    * n_events, sum_cents), the sum taken over the fifth input column
+    * (integral; NULL counts as 0) off the bounded ring as the match
+    * confirms — matched rows are never re-shuffled or joined back. Same
+    * contract and bounds as [[matchSpansOf]]. */
+  private[graft] def matchMeasuresOf(ev: DataFrame,
+                                     pattern: String): DataFrame =
+    codedFold(ev)(new RowMatcher.Spans(pattern, _, RowMatcher.PerMatch))
+      .select(col("user_id"), col("match_seq"), col("start_us"),
+        col("start_event_id"), col("end_us"), col("end_event_id"),
+        col("n_events"), col("sum_value").as("sum_cents"))
+
+  /** AFTER MATCH SKIP TO NEXT ROW — the other SQL:2016 skip mode
+    * ([[matchCountsOf]] is SKIP PAST LAST ROW): per entity, the rows
+    * where a match STARTS, overlapping matches counted — exactly
+    * `Matcher.region(i, n).lookingAt()` per position (RowPatternSpec).
+    * The reversed-NFA StartDetector folds over the entity's events in
+    * DESCENDING (us, event_id) order: one O(|pattern|)-bit liveness set
+    * per entity for ANY pattern, no speculation chain, no depth cap. */
+  private[graft] def overlapCountsOf(ev: DataFrame,
+                                     pattern: String): DataFrame =
+  {
+    val c = ev.toDF("user_id", "us", "event_id", "code")
+    matchFold(c.withColumn("neg_us", -col("us"))
+      .withColumn("neg_id", -col("event_id")), Seq("user_id"),
+      Seq("neg_us", "neg_id"),
+      new RowMatcher.Starts(pattern, RowMatcher.Cols(code = 3)))
   }
 
-  /** Row-pattern match counts with DEFINE-style NAVIGATION — the
-    * engine behind ev_updown_runs / api.Events.matchPatternBy: real
-    * MATCH_RECOGNIZE classifies events by predicates over neighbors
-    * (`DEFINE U AS price > PREV(price)`), which a precomputed per-row
-    * code column cannot express, so here the code char is computed
-    * INSIDE the ordered fold by `classify(prev, cur)` — prev is the
-    * entity's previous row in `orderCols` order (null on the first
-    * event) — and fed straight to the same speculation-chain machine
-    * as matchCountsOf. Per-entity state is the machine plus ONE held
-    * row (the PREV window), so the memory contract is unchanged:
-    * O(|pattern|) for terminator-disjoint patterns, depthCap-bounded
-    * loud failure otherwise, never the trace. Generalizing to
-    * PREV(k)/NEXT(k) is a k-row ring in the same state — the fold
-    * already delivers the ordered stream. */
+  /** Row-pattern match counts with DEFINE-style NAVIGATION — behind
+    * ev_updown_runs / api.Events.matchPatternBy: real MATCH_RECOGNIZE
+    * classifies events by predicates over neighbors (`DEFINE U AS
+    * price > PREV(price)`), which a precomputed code column cannot
+    * express, so the code char is `classify(prev, cur)` computed INSIDE
+    * the fold — prev the entity's previous row in `orderCols` order
+    * (null on the first). Per-entity state is [[matchCountsOf]]'s plus
+    * ONE held row. */
   private[graft] def matchCountsClassified(
       ev: DataFrame, pattern: String, keyCols: Seq[String],
       orderCols: Seq[String], depthCap: Int = 4096)(
-      classify: (org.apache.spark.sql.Row,
-        org.apache.spark.sql.Row) => Char): DataFrame = {
-    val prog = graft.functions.RowPattern.compile(pattern)
-    final class St {
-      val m = new graft.functions.RowPattern.MatchCounter(prog, depthCap)
-      var prev: org.apache.spark.sql.Row = _
-    }
-    graft.api.Folds.foldOrdered(
-      ev, keyCols, orderCols,
-      out = new org.apache.spark.sql.types.StructType()
-        .add("n_matches", org.apache.spark.sql.types.LongType))(
-      () => new St)(
-      (st, r) => {
-        st.m.feed(classify(st.prev, r))
-        st.prev = r
-        st
-      })(
-      st => Seq(java.lang.Long.valueOf(st.m.finish())))
-  }
+      classify: RowMatcher.Classify): DataFrame =
+    matchFold(ev, keyCols, orderCols, new RowMatcher.Counts(pattern,
+      depthCap, RowMatcher.Cols(), classify))
 
   /** Row-pattern match counts with DEEP NAVIGATION — PREV(col, n) for
-    * n > 1 (round 12; [[matchCountsClassified]] is the n = 1 case):
-    * SQL:2016 DEFINE predicates may navigate any fixed distance back
-    * (`DEFINE U AS price > PREV(price, 2)`), so here the classifier
-    * sees the entity's last `lag` rows — `classify(prevs, cur)` with
-    * `prevs` ordered OLDEST→NEWEST (so `prevs.last` is PREV(1) and
-    * `prevs.head` is PREV(n) once the window is full; shorter than
-    * `lag` near the entity's start). The fold holds a bounded `lag`-row
-    * ring per entity — state O(|pattern| + lag), never the trace; lag
-    * is capped at 64 like counted repetition (a deeper fixed
-    * navigation is the wrong tool in any engine). NEXT(k) is the same
-    * ring run on the reversed order (the overlapCountsOf technique) —
-    * compose with negated orderCols if needed. */
+    * n > 1 ([[matchCountsClassified]] is n = 1): the classifier sees
+    * the entity's last `lag` rows OLDEST→NEWEST (`prevs.last` is
+    * PREV(1), `prevs.head` PREV(n) once the window is full; shorter
+    * near the entity's start). State is the machine plus a `lag`-row
+    * window, lag capped at 64 like counted repetition. NEXT(k) is the
+    * same window over the reversed order (the overlapCountsOf
+    * technique). */
   private[graft] def matchCountsClassifiedLag(
       ev: DataFrame, pattern: String, keyCols: Seq[String],
       orderCols: Seq[String], lag: Int, depthCap: Int = 4096)(
       classify: (collection.IndexedSeq[org.apache.spark.sql.Row],
         org.apache.spark.sql.Row) => Char): DataFrame = {
     require(lag >= 1 && lag <= 64, s"navigation depth $lag out of [1,64]")
-    val prog = graft.functions.RowPattern.compile(pattern)
-    final class St {
-      val m = new graft.functions.RowPattern.MatchCounter(prog, depthCap)
-      val prevs = scala.collection.mutable.ArrayDeque
-        .empty[org.apache.spark.sql.Row]
-    }
-    graft.api.Folds.foldOrdered(
-      ev, keyCols, orderCols,
-      out = new org.apache.spark.sql.types.StructType()
-        .add("n_matches", org.apache.spark.sql.types.LongType))(
-      () => new St)(
-      (st, r) => {
-        st.m.feed(classify(st.prevs, r))
-        st.prevs.append(r)
-        if (st.prevs.length > lag) { st.prevs.removeHead(); () }
+    val prog = RowPattern.compile(pattern)
+    graft.api.Folds.foldOrdered(ev, keyCols, orderCols,
+      out = new StructType().add("n_matches", LongType))(
+      () => (new RowPattern.MatchCounter(prog, depthCap),
+        scala.collection.mutable.ArrayDeque.empty[org.apache.spark.sql.Row]))(
+      { case (st @ (m, prevs), r) =>
+        m.feed(classify(prevs, r))
+        prevs.append(r)
+        if (prevs.length > lag) prevs.removeHead()
         st
       })(
-      st => Seq(java.lang.Long.valueOf(st.m.finish())))
+      st => Seq(Long.box(st._1.finish())))
   }
 
-  /** ONE ROW PER MATCH with DEFINE-style NAVIGATION (round 11 — the
-    * matchCountsClassified classifier threaded through the span-family
-    * output modes): the code char is computed INSIDE the ordered fold
-    * by `classify(prev, cur)` — prev the entity's previous row in
-    * `orderCols` order, null on the first — and fed to the SAME
-    * span-mode machine + minLivePos-pruned ring as matchSpansOf, so
-    * `DEFINE U AS price > PREV(price)` composes with span output.
-    * Emits per confirmed match (keyCols..., match_seq, start_id,
-    * end_id, n_events) where start_id/end_id are `idCol` (LONG) of the
-    * match's first/last rows and match_seq numbers the entity's
-    * matches in start order. Contract: terminator-disjoint pattern
-    * (loud failure otherwise); per-entity state the machine + ONE held
-    * row + the ring — O(|pattern| + longest live match), never the
-    * trace. */
+  /** ONE ROW PER MATCH with DEFINE-style NAVIGATION — behind
+    * ev_updown_spans / api.Events.matchSpansBy: [[matchCountsClassified]]'s
+    * classifier feeding [[matchSpansOf]]'s span machine and ring. Emits
+    * (keyCols..., match_seq, start_id, end_id, n_events), ids from
+    * `idCol` (LONG), match_seq in start order. Terminator-disjoint
+    * patterns only; state O(|pattern| + longest live match) plus ONE
+    * held row. */
   private[graft] def matchSpansClassified(
       ev: DataFrame, pattern: String, keyCols: Seq[String],
       orderCols: Seq[String], idCol: String)(
-      classify: (org.apache.spark.sql.Row,
-        org.apache.spark.sql.Row) => Char): DataFrame = {
-    val prog = graft.functions.RowPattern.compile(pattern)
-    require(graft.functions.RowPattern.terminatorDisjoint(prog),
-      s"classified span mode needs a terminator-disjoint pattern; " +
-        s"'$pattern' is not — use matchCountsClassified")
-    val idIdx = ev.schema.fieldIndex(idCol)
-    final class St {
-      val ring = new graft.functions.RowPattern.SpanRing[Long](
-        new graft.functions.RowPattern.MatchCounter(prog, trackSpans = true))
-      var prev: org.apache.spark.sql.Row = _
-      var seq = 0L
-      def row(sp: (Long, Long)): Seq[Any] = {
-        seq += 1
-        Seq(Long.box(seq), Long.box(ring.first(sp)), Long.box(ring.last(sp)),
-          Long.box(sp._2 - sp._1))
-      }
-    }
-    graft.api.Folds.flatFoldOrdered(
-      ev, keyCols, orderCols,
-      out = new org.apache.spark.sql.types.StructType()
-        .add("match_seq", org.apache.spark.sql.types.LongType)
-        .add("start_id", org.apache.spark.sql.types.LongType)
-        .add("end_id", org.apache.spark.sql.types.LongType)
-        .add("n_events", org.apache.spark.sql.types.LongType))(
-      () => new St)(
-      (st, r) => {
-        val c = classify(st.prev, r)
-        st.prev = r
-        val out = st.ring.feed(r.getLong(idIdx), c).map(st.row)
-        st.ring.prune()
-        out
-      })(
-      st => st.ring.finishSpans().map(st.row))
-  }
+      classify: RowMatcher.Classify): DataFrame =
+    keyed(matchFold(ev, keyCols, orderCols, new RowMatcher.Spans(pattern,
+      classified(ev, idCol), RowMatcher.PerMatch, classify)), keyCols,
+      col("match_seq"), col("start_event_id").as("start_id"),
+      col("end_event_id").as("end_id"), col("n_events"))
 
-  /** ALL ROWS PER MATCH with DEFINE-style NAVIGATION: the classified
-    * twin of matchRowsOf — every row of every confirmed match emits
-    * (keyCols..., match_seq, ord_in_match, idCol value, cls), `cls`
-    * the row's CLASSIFIER() label as computed by `classify` inside the
-    * fold (the SQL:2016 CLASSIFIER() column at ALL ROWS grain, which a
-    * precomputed code column cannot carry for navigation predicates).
-    * Same machine, ring, bounds, and terminator-disjoint contract as
-    * [[matchSpansClassified]]; emission streams as spans confirm. */
+  /** ALL ROWS PER MATCH with DEFINE-style NAVIGATION — behind
+    * ev_updown_rows / api.Events.matchRowsBy: every row of every match
+    * as (keyCols..., match_seq, ord_in_match, id, cls), `cls` the row's
+    * CLASSIFIER() label as the fold computed it. Same contract as
+    * [[matchSpansClassified]]. */
   private[graft] def matchRowsClassified(
       ev: DataFrame, pattern: String, keyCols: Seq[String],
       orderCols: Seq[String], idCol: String)(
-      classify: (org.apache.spark.sql.Row,
-        org.apache.spark.sql.Row) => Char): DataFrame = {
-    val prog = graft.functions.RowPattern.compile(pattern)
-    require(graft.functions.RowPattern.terminatorDisjoint(prog),
-      s"classified ALL ROWS mode needs a terminator-disjoint pattern; " +
-        s"'$pattern' is not — use matchCountsClassified")
-    val idIdx = ev.schema.fieldIndex(idCol)
-    final class St {
-      val ring = new graft.functions.RowPattern.SpanRing[(Long, String)](
-        new graft.functions.RowPattern.MatchCounter(prog, trackSpans = true))
-      var prev: org.apache.spark.sql.Row = _
-      var seq = 0L
-      def rows(sp: (Long, Long)): Seq[Seq[Any]] = {
-        seq += 1
-        ring.slice(sp).zipWithIndex.map { case ((id, cls), ord) =>
-          Seq(Long.box(seq), Long.box(ord + 1L), Long.box(id), cls)
-        }
-      }
-    }
-    graft.api.Folds.flatFoldOrdered(
-      ev, keyCols, orderCols,
-      out = new org.apache.spark.sql.types.StructType()
-        .add("match_seq", org.apache.spark.sql.types.LongType)
-        .add("ord_in_match", org.apache.spark.sql.types.LongType)
-        .add("id", org.apache.spark.sql.types.LongType)
-        .add("cls", org.apache.spark.sql.types.StringType))(
-      () => new St)(
-      (st, r) => {
-        val c = classify(st.prev, r)
-        st.prev = r
-        val out = st.ring.feed((r.getLong(idIdx), String.valueOf(c)), c)
-          .flatMap(st.rows)
-        st.ring.prune()
-        out
-      })(
-      st => st.ring.finishSpans().flatMap(st.rows))
-  }
+      classify: RowMatcher.Classify): DataFrame =
+    keyed(matchFold(ev, keyCols, orderCols, new RowMatcher.Spans(pattern,
+      classified(ev, idCol), RowMatcher.AllRows, classify)), keyCols,
+      col("match_seq"), col("ord_in_match"), col("id"), col("cls"))
 
-  /** ALL ROWS PER MATCH with RUNNING vs FINAL measure semantics
-    * (round 12 — the SQL:2016 distinction the MEASURES clause defines
-    * at ALL ROWS grain: `RUNNING SUM(x)` is the aggregate over the
-    * match's rows UP TO AND INCLUDING the current row, `FINAL SUM(x)`
-    * the aggregate over the WHOLE match, identical on the last row):
-    * the classified ALL ROWS fold, each emitted row additionally
-    * carrying `running_sum` (the inclusive prefix sum of `measureCol`
-    * inside its match — the fold walks the confirmed span's ring slice
-    * in order, so the accumulator is free) and `final_sum` (the
-    * match's total, known at confirmation since spans only emit
-    * confirmed). RUNNING COUNT(*) is `ord_in_match` itself, so no
-    * separate column. Emits (keyCols..., match_seq, ord_in_match, id,
-    * cls, running_sum, final_sum); same machine, ring, bounds, and
-    * terminator-disjoint contract as [[matchRowsClassified]];
-    * `measureCol` integral (pre-scale money to cents). */
+  /** ALL ROWS PER MATCH with RUNNING vs FINAL measures — behind
+    * ev_updown_running / api.Events.matchRowsRunningBy (SQL:2016:
+    * `RUNNING SUM(x)` aggregates the match's rows up to and including
+    * the current one, `FINAL SUM(x)` the whole match, equal on the last
+    * row): [[matchRowsClassified]]'s rows plus running_sum and
+    * final_sum of `measureCol` (integral — pre-scale money to cents;
+    * NULL counts as 0). RUNNING COUNT(*) is ord_in_match itself. */
   private[graft] def matchRowsRunning(
       ev: DataFrame, pattern: String, keyCols: Seq[String],
       orderCols: Seq[String], idCol: String, measureCol: String)(
-      classify: (org.apache.spark.sql.Row,
-        org.apache.spark.sql.Row) => Char): DataFrame = {
-    val prog = graft.functions.RowPattern.compile(pattern)
-    require(graft.functions.RowPattern.terminatorDisjoint(prog),
-      s"RUNNING-measures ALL ROWS mode needs a terminator-disjoint " +
-        s"pattern; '$pattern' is not — use matchCountsClassified")
-    val idIdx = ev.schema.fieldIndex(idCol)
-    val mIdx = ev.schema.fieldIndex(measureCol)
-    final class St {
-      val ring = new graft.functions.RowPattern.SpanRing[
-        (Long, String, Long)](
-        new graft.functions.RowPattern.MatchCounter(prog, trackSpans = true))
-      var prev: org.apache.spark.sql.Row = _
-      var seq = 0L
-      def rows(sp: (Long, Long)): Seq[Seq[Any]] = {
-        seq += 1
-        val evs = ring.slice(sp)
-        var total = 0L
-        evs.foreach(total += _._3)
-        var running = 0L
-        evs.zipWithIndex.map { case ((id, cls, v), ord) =>
-          running += v
-          Seq(Long.box(seq), Long.box(ord + 1L), Long.box(id), cls,
-            Long.box(running), Long.box(total))
-        }
-      }
-    }
-    graft.api.Folds.flatFoldOrdered(
-      ev, keyCols, orderCols,
-      out = new org.apache.spark.sql.types.StructType()
-        .add("match_seq", org.apache.spark.sql.types.LongType)
-        .add("ord_in_match", org.apache.spark.sql.types.LongType)
-        .add("id", org.apache.spark.sql.types.LongType)
-        .add("cls", org.apache.spark.sql.types.StringType)
-        .add("running_sum", org.apache.spark.sql.types.LongType)
-        .add("final_sum", org.apache.spark.sql.types.LongType))(
-      () => new St)(
-      (st, r) => {
-        val c = classify(st.prev, r)
-        st.prev = r
-        val out = st.ring.feed(
-          (r.getLong(idIdx), String.valueOf(c),
-            if (r.isNullAt(mIdx)) 0L else r.getLong(mIdx)), c)
-          .flatMap(st.rows)
-        st.ring.prune()
-        out
-      })(
-      st => st.ring.finishSpans().flatMap(st.rows))
-  }
+      classify: RowMatcher.Classify): DataFrame =
+    keyed(matchFold(ev, keyCols, orderCols, new RowMatcher.Spans(pattern,
+      classified(ev, idCol, measureCol), RowMatcher.AllRows, classify)),
+      keyCols, col("match_seq"), col("ord_in_match"), col("id"),
+      col("cls"), col("running_sum"), col("final_sum"))
 
-  /** MEASURES with DEFINE-style NAVIGATION: the classified twin of
-    * matchMeasuresOf — every confirmed match emits ONE aggregate row
-    * (keyCols..., match_seq, start_id, end_id, n_events, sum_measure),
-    * sum_measure the exact long sum of `measureCol` over the matched
-    * rows, aggregated off the bounded ring AS SPANS CONFIRM (matched
-    * rows are never re-shuffled or joined back). Same contract and
-    * bounds as [[matchSpansClassified]]; `measureCol` must be integral
-    * (pre-scale money to cents — the decimal-exactness contract). */
+  /** MEASURES with DEFINE-style NAVIGATION — behind ev_updown_measures /
+    * api.Events.matchMeasuresBy: per match (keyCols..., match_seq,
+    * start_id, end_id, n_events, sum_measure), the exact long sum of
+    * `measureCol` (integral — pre-scale money to cents) over the matched
+    * rows, aggregated off the ring as the match confirms. Same contract
+    * as [[matchSpansClassified]]. */
   private[graft] def matchMeasuresClassified(
       ev: DataFrame, pattern: String, keyCols: Seq[String],
       orderCols: Seq[String], idCol: String, measureCol: String)(
-      classify: (org.apache.spark.sql.Row,
-        org.apache.spark.sql.Row) => Char): DataFrame = {
-    val prog = graft.functions.RowPattern.compile(pattern)
-    require(graft.functions.RowPattern.terminatorDisjoint(prog),
-      s"classified MEASURES mode needs a terminator-disjoint pattern; " +
-        s"'$pattern' is not — use matchCountsClassified")
-    val idIdx = ev.schema.fieldIndex(idCol)
-    val mIdx = ev.schema.fieldIndex(measureCol)
-    final class St {
-      val ring = new graft.functions.RowPattern.SpanRing[(Long, Long)](
-        new graft.functions.RowPattern.MatchCounter(prog, trackSpans = true))
-      var prev: org.apache.spark.sql.Row = _
-      var seq = 0L
-      def measures(sp: (Long, Long)): Seq[Any] = {
-        seq += 1
-        val evs = ring.slice(sp)
-        var sum = 0L
-        evs.foreach(sum += _._2)
-        Seq(Long.box(seq), Long.box(evs.head._1), Long.box(evs.last._1),
-          Long.box(evs.length.toLong), Long.box(sum))
-      }
-    }
-    graft.api.Folds.flatFoldOrdered(
-      ev, keyCols, orderCols,
-      out = new org.apache.spark.sql.types.StructType()
-        .add("match_seq", org.apache.spark.sql.types.LongType)
-        .add("start_id", org.apache.spark.sql.types.LongType)
-        .add("end_id", org.apache.spark.sql.types.LongType)
-        .add("n_events", org.apache.spark.sql.types.LongType)
-        .add("sum_measure", org.apache.spark.sql.types.LongType))(
-      () => new St)(
-      (st, r) => {
-        val c = classify(st.prev, r)
-        st.prev = r
-        val out = st.ring.feed(
-          (r.getLong(idIdx), if (r.isNullAt(mIdx)) 0L else r.getLong(mIdx)),
-          c).map(st.measures)
-        st.ring.prune()
-        out
-      })(
-      st => st.ring.finishSpans().map(st.measures))
-  }
+      classify: RowMatcher.Classify): DataFrame =
+    keyed(matchFold(ev, keyCols, orderCols, new RowMatcher.Spans(pattern,
+      classified(ev, idCol, measureCol), RowMatcher.PerMatch, classify)),
+      keyCols, col("match_seq"), col("start_event_id").as("start_id"),
+      col("end_event_id").as("end_id"), col("n_events"),
+      col("sum_value").as("sum_measure"))
 
-  /** Per-entity row-pattern match ROWS (ALL ROWS PER MATCH — the third
-    * SQL:2016 output mode) — the engine behind ev_match_rows /
-    * api.Events.matchRows: the same ordered fold, span machine, and
-    * minLivePos-pruned position→event ring as matchSpansOf, but each
-    * confirmed span emits one row PER EVENT it covers:
-    * (match_seq, ord_in_match, us, event_id, code), match_seq
-    * numbering the entity's matches in start order (the span-order
-    * guarantee is RowPattern.absorb's prepend-merge) and ord_in_match
-    * the events inside the match. Same contract: terminator-disjoint
-    * pattern (loud failure otherwise), exactly one code char per
-    * event; per-entity memory O(|pattern| + longest live match) — the
-    * ring holds only events ≥ the machine's minLivePos, and emission
-    * streams as spans confirm, so a million-match entity never
-    * buffers its output. */
-  private[graft] def matchRowsOf(ev: DataFrame,
-                                 pattern: String): DataFrame = {
-    val prog = graft.functions.RowPattern.compile(pattern)
-    require(graft.functions.RowPattern.terminatorDisjoint(prog),
-      s"ALL ROWS PER MATCH needs a terminator-disjoint pattern; " +
-        s"'$pattern' is not — use match counting (matchCountsOf)")
-    final class St {
-      val ring = new graft.functions.RowPattern.SpanRing[
-        (Long, Long, String)](
-        new graft.functions.RowPattern.MatchCounter(prog, trackSpans = true))
-      var seq = 0L // per-entity match ordinal, in start order
-      def rows(sp: (Long, Long)): Seq[Seq[Any]] = {
-        seq += 1
-        ring.slice(sp).zipWithIndex.map { case ((us, id, code), ord) =>
-          Seq(Long.box(seq), Long.box(ord + 1L), Long.box(us),
-            Long.box(id), code)
-        }
-      }
-    }
-    graft.api.Folds.flatFoldOrdered(
-      ev.toDF("user_id", "us", "event_id", "code"),
-      keyCols = Seq("user_id"), orderCols = Seq("us", "event_id"),
-      out = new org.apache.spark.sql.types.StructType()
-        .add("match_seq", org.apache.spark.sql.types.LongType)
-        .add("ord_in_match", org.apache.spark.sql.types.LongType)
-        .add("us", org.apache.spark.sql.types.LongType)
-        .add("event_id", org.apache.spark.sql.types.LongType)
-        .add("code", org.apache.spark.sql.types.StringType))(
-      () => new St)(
-      (st, r) => {
-        val code = r.getString(3)
-        if (code == null) Nil
-        else {
-          require(code.length == 1,
-            "ALL ROWS mode needs exactly one code char per event")
-          val out = st.ring.feed((r.getLong(1), r.getLong(2), code),
-            code.charAt(0)).flatMap(st.rows)
-          st.ring.prune()
-          out
-        }
-      })(
-      st => st.ring.finishSpans().flatMap(st.rows))
-  }
-
-  /** AFTER MATCH SKIP TO FIRST/LAST `<var>` (round 11 — the remaining
-    * SQL:2016 skip modes, completing the matrix with PAST LAST ROW =
-    * matchCountsOf/matchSpansOf and TO NEXT ROW = overlapCountsOf):
-    * the pattern is an ordered sequence of NAMED components (the
-    * SQL:2016 `PATTERN (strt down+ up+)` shape) and after each match
+  /** AFTER MATCH SKIP TO FIRST/LAST `<var>` — behind ev_vshape_skip_* /
+    * api.Events.matchSpansSkipBy: the pattern is an ordered sequence of
+    * NAMED components (`PATTERN (strt down+ up+)`) and after each match
     * the scan resumes AT the first/last row mapped to the named
-    * component — matches may overlap at the shared row (the classic
-    * V-shape chain, where one match's peak anchors the next). The
-    * classifier runs INSIDE the fold ([[matchCountsClassified]]'s
-    * DEFINE/PREV contract), so navigation predicates compose with the
-    * skip modes too. Emits (keyCols..., match_seq, start_id, end_id,
-    * n_events), ids from `idCol` (LONG), match_seq in start order.
-    *
-    * Engine: [[graft.functions.RowPattern.SkipScanner]] — an anchored
-    * Pike-VM attempt over the buffered current attempt, with the
-    * match's component boundaries recovered by a priority-order DFS
-    * (java.regex's group assignment; RowPatternSpec pins the engine
-    * against a region+lookingAt+groups replay). Per-entity state is
-    * ONE attempt's rows + an O(|pattern|) thread set — bounded by the
-    * longest match attempt, never the history; worst-case work is
-    * attempts × attempt length, the price of overlap-capable skips
-    * (PAST LAST ROW stays on the bufferless chain, TO NEXT ROW counts
-    * in O(bits) — use those paths when their semantics suffice). */
+    * component, so matches may overlap at the shared row (the V-shape
+    * chain). Classification runs inside the fold as in
+    * [[matchCountsClassified]]. Emits (keyCols..., match_seq, start_id,
+    * end_id, n_events). Engine: RowPattern.SkipScanner — an anchored
+    * Pike-VM attempt with component boundaries from a priority-order
+    * DFS (java.regex's group assignment, replay-pinned); per-entity
+    * state is ONE attempt's rows, worst-case work attempts × attempt
+    * length (PAST LAST ROW and TO NEXT ROW have cheaper paths above). */
   private[graft] def matchSpansSkip(
       ev: DataFrame, components: Seq[(String, String)],
-      skip: graft.functions.RowPattern.SkipMode,
+      skip: RowPattern.SkipMode,
       keyCols: Seq[String], orderCols: Seq[String], idCol: String)(
-      classify: (org.apache.spark.sql.Row,
-        org.apache.spark.sql.Row) => Char): DataFrame = {
-    val sp = new graft.functions.RowPattern.SkipProgram(components)
-    val idIdx = ev.schema.fieldIndex(idCol)
-    final class St {
-      val sc = new graft.functions.RowPattern.SkipScanner[Long](sp, skip)
-      var prev: org.apache.spark.sql.Row = _
-      var seq = 0L
-      def rows(ms: List[graft.functions.RowPattern.SkipMatch[Long]])
-          : List[Seq[Any]] =
-        ms.map { m =>
-          seq += 1
-          Seq(Long.box(seq), Long.box(m.first), Long.box(m.last),
-            Long.box(m.len.toLong))
-        }
-    }
-    graft.api.Folds.flatFoldOrdered(
-      ev, keyCols, orderCols,
-      out = new org.apache.spark.sql.types.StructType()
-        .add("match_seq", org.apache.spark.sql.types.LongType)
-        .add("start_id", org.apache.spark.sql.types.LongType)
-        .add("end_id", org.apache.spark.sql.types.LongType)
-        .add("n_events", org.apache.spark.sql.types.LongType))(
-      () => new St)(
-      (st, r) => {
-        val c = classify(st.prev, r)
-        st.prev = r
-        st.rows(st.sc.feed(c, r.getLong(idIdx)))
-      })(
-      st => st.rows(st.sc.finish()))
-  }
+      classify: RowMatcher.Classify): DataFrame =
+    keyed(matchFold(ev, keyCols, orderCols, new RowMatcher.Skips(components,
+      skip, classified(ev, idCol), RowMatcher.PerMatch, classify)), keyCols,
+      col("match_seq"), col("start_event_id").as("start_id"),
+      col("end_event_id").as("end_id"), col("n_events"))
 
-  /** PER-VARIABLE MEASURES (round 11 — the SQL:2016 MEASURES clause
-    * at COMPONENT scope: `COUNT(down.*)`, `SUM(down.price)` …): every
-    * confirmed match of the named-component pattern emits ONE row with
-    * (keyCols..., match_seq, start_id, end_id) plus, for EACH
-    * component, its matched-row count and the exact long sum of
-    * `measureCol` over exactly those rows — the component boundaries
-    * are the [[graft.functions.RowPattern.SkipScanner]]'s
-    * priority-order DFS assignment (java.regex's groups,
-    * replay-pinned), so `down`'s sum covers precisely the rows
-    * java.regex would put in the `down` group. Aggregation happens on
-    * the match's own rows at confirmation — nothing is re-shuffled or
-    * joined back; per-entity state is one buffered attempt. Skip mode
-    * composes (overlapping matches each aggregate their own rows).
-    * `subsets` (round 12) adds SQL:2016 SUBSET columns — named unions
-    * of components (`SUBSET W = (down, up)`), each emitting
-    * `{name}_n` / `{name}_sum` over exactly the rows mapped to ANY
-    * member (the boundaries partition the match, so member sums add —
-    * validated inline). */
+  /** PER-VARIABLE MEASURES (`COUNT(down.*)`, `SUM(down.price)` …) —
+    * behind ev_vshape_measures / ev_vshape_subset /
+    * api.Events.matchVarMeasuresBy: per match (keyCols..., match_seq,
+    * start_id, end_id) plus `{name}_n` / `{name}_sum` per component
+    * over exactly the rows java.regex would put in its group, then the
+    * same per SQL:2016 SUBSET (`SUBSET W = (down, up)` — a named union
+    * of components, validated like the standard). Skip modes compose as
+    * in [[matchSpansSkip]]. */
   private[graft] def matchVarMeasures(
       ev: DataFrame, components: Seq[(String, String)],
-      skip: graft.functions.RowPattern.SkipMode,
+      skip: RowPattern.SkipMode,
       keyCols: Seq[String], orderCols: Seq[String],
       idCol: String, measureCol: String,
       subsets: Seq[(String, Seq[String])] = Nil)(
-      classify: (org.apache.spark.sql.Row,
-        org.apache.spark.sql.Row) => Char): DataFrame = {
-    val sp = new graft.functions.RowPattern.SkipProgram(components)
-    val idIdx = ev.schema.fieldIndex(idCol)
-    val mIdx = ev.schema.fieldIndex(measureCol)
-    val names = components.map(_._1)
-    // SQL:2016 SUBSET (round 12): named UNIONS of pattern variables —
-    // `SUBSET W = (down, up)` makes W usable in MEASURES, aggregating
-    // over exactly the rows mapped to ANY member component. A row maps
-    // to exactly one component (the boundaries partition the match),
-    // so a subset's aggregate is the plain sum of its members' — no
-    // double counting by construction. Validated here like the
-    // standard: members must be declared components, subset names must
-    // not collide with component names or each other.
-    subsets.foreach { case (sn, members) =>
-      require(members.nonEmpty, s"SUBSET $sn needs at least one member")
-      require(!names.contains(sn),
-        s"SUBSET name '$sn' collides with a component name")
-      members.foreach(mn => require(names.contains(mn),
-        s"SUBSET $sn member '$mn' is not a declared component " +
-          s"(have: ${names.mkString(",")})"))
-      require(members.distinct.length == members.length,
-        s"SUBSET $sn lists a member twice")
-    }
-    require(subsets.map(_._1).distinct.length == subsets.length,
-      "duplicate SUBSET names")
-    val subsetIdx: Seq[(String, Seq[Int])] =
-      subsets.map { case (sn, ms) => sn -> ms.map(names.indexOf(_)) }
-    val outType = (names.map(n => (s"${n}_n", s"${n}_sum")) ++
-      subsets.map { case (sn, _) => (s"${sn}_n", s"${sn}_sum") })
-      .foldLeft(
-        new org.apache.spark.sql.types.StructType()
-          .add("match_seq", org.apache.spark.sql.types.LongType)
-          .add("start_id", org.apache.spark.sql.types.LongType)
-          .add("end_id", org.apache.spark.sql.types.LongType)) {
-        case (t, (cn, sn2)) =>
-          t.add(cn, org.apache.spark.sql.types.LongType)
-            .add(sn2, org.apache.spark.sql.types.LongType)
-      }
-    final class St {
-      val sc = new graft.functions.RowPattern.SkipScanner[(Long, Long)](
-        sp, skip)
-      var prev: org.apache.spark.sql.Row = _
-      var seq = 0L
-      def rows(ms: List[graft.functions.RowPattern.SkipMatch[(Long, Long)]])
-          : List[Seq[Any]] =
-        ms.map { m =>
-          seq += 1
-          val perN = new Array[Long](names.length)
-          val perS = new Array[Long](names.length)
-          names.indices.foreach { i =>
-            val c = m.comp(i)
-            var s = 0L
-            c.foreach(s += _._2)
-            perN(i) = c.length.toLong
-            perS(i) = s
-          }
-          val per = names.indices.flatMap(i =>
-            Seq(Long.box(perN(i)), Long.box(perS(i))))
-          val sub = subsetIdx.flatMap { case (_, is) =>
-            Seq(Long.box(is.map(perN).sum), Long.box(is.map(perS).sum))
-          }
-          Seq(Long.box(seq), Long.box(m.first._1),
-            Long.box(m.last._1)) ++ per ++ sub
-        }
-    }
-    graft.api.Folds.flatFoldOrdered(
-      ev, keyCols, orderCols, out = outType)(
-      () => new St)(
-      (st, r) => {
-        val c = classify(st.prev, r)
-        st.prev = r
-        st.rows(st.sc.feed(c,
-          (r.getLong(idIdx), if (r.isNullAt(mIdx)) 0L else r.getLong(mIdx))))
-      })(
-      st => st.rows(st.sc.finish()))
-  }
+      classify: RowMatcher.Classify): DataFrame =
+    matchFold(ev, keyCols, orderCols, new RowMatcher.Skips(components,
+      skip, classified(ev, idCol, measureCol),
+      RowMatcher.VarMeasures(components.map(_._1).toIndexedSeq, subsets),
+      classify))
 
-  /** FIRST/LAST VALUE NAVIGATION in MEASURES (round 13 — SQL:2016's
-    * `FIRST(down.price)` / `LAST(down.price)`: the measure value of
-    * the FIRST and LAST row java.regex's group assignment maps to each
-    * pattern variable — the last commonly-used MEASURES form after
-    * count/sum ([[matchVarMeasures]]) and RUNNING/FINAL
-    * ([[matchRowsRunning]])): every confirmed match emits ONE row with
-    * (keyCols..., match_seq, start_id, end_id) plus, per component,
-    * `{name}_first` / `{name}_last` — NULL when the component matched
-    * zero rows (a `X*` variable that matched empty — SQL:2016's
-    * navigation-on-empty semantics) AND when the boundary row's
-    * measure is itself NULL (value-preserving navigation, round 14 /
-    * ADVICE r13: the measure rides the scanner boxed, never coerced
-    * to 0). FIRST(X.v) = LAST(X.v) on
-    * one-row components by construction. Component boundaries are the
-    * same priority-order DFS assignment as matchVarMeasures
-    * (replay-pinned against java.regex capture groups in
-    * EventFoldSpec); aggregation happens on the match's own rows at
-    * confirmation, nothing re-shuffled or joined back; skip modes
-    * compose. */
+  /** FIRST/LAST VALUE NAVIGATION (`FIRST(down.price)`,
+    * `LAST(down.price)`) — behind ev_vshape_firstlast /
+    * api.Events.matchVarNavBy: per match (keyCols..., match_seq,
+    * start_id, end_id) plus `{name}_first` / `{name}_last` per
+    * component — NULL when the component matched zero rows (SQL:2016
+    * navigation-on-empty) and when the boundary row's measure is NULL
+    * (navigation is value-preserving; EventFoldSpec pins both). */
   private[graft] def matchVarNav(
       ev: DataFrame, components: Seq[(String, String)],
-      skip: graft.functions.RowPattern.SkipMode,
+      skip: RowPattern.SkipMode,
       keyCols: Seq[String], orderCols: Seq[String],
       idCol: String, measureCol: String)(
-      classify: (org.apache.spark.sql.Row,
-        org.apache.spark.sql.Row) => Char): DataFrame = {
-    val sp = new graft.functions.RowPattern.SkipProgram(components)
-    val idIdx = ev.schema.fieldIndex(idCol)
-    val mIdx = ev.schema.fieldIndex(measureCol)
-    val names = components.map(_._1)
-    val outType = names
-      .foldLeft(
-        new org.apache.spark.sql.types.StructType()
-          .add("match_seq", org.apache.spark.sql.types.LongType)
-          .add("start_id", org.apache.spark.sql.types.LongType)
-          .add("end_id", org.apache.spark.sql.types.LongType)) {
-        case (t, n) =>
-          t.add(s"${n}_first", org.apache.spark.sql.types.LongType)
-            .add(s"${n}_last", org.apache.spark.sql.types.LongType)
-      }
-    final class St {
-      // the measure rides the ring BOXED and nullable (ADVICE r13):
-      // navigation is value-preserving — a matched row whose measure
-      // is NULL must navigate to NULL, not 0 (matchRowsRunning's 0L
-      // coercion is fine there because SUM ignores NULLs; FIRST/LAST
-      // report the value itself)
-      val sc = new graft.functions.RowPattern.SkipScanner[
-        (Long, java.lang.Long)](sp, skip)
-      var prev: org.apache.spark.sql.Row = _
-      var seq = 0L
-      def rows(ms: List[graft.functions.RowPattern.SkipMatch[
-          (Long, java.lang.Long)]]): List[Seq[Any]] =
-        ms.map { m =>
-          seq += 1
-          val nav = names.indices.flatMap { i =>
-            val c = m.comp(i)
-            if (c.isEmpty) Seq(null, null)
-            else Seq(c.head._2, c.last._2)
-          }
-          Seq(Long.box(seq), Long.box(m.first._1),
-            Long.box(m.last._1)) ++ nav
-        }
-    }
-    graft.api.Folds.flatFoldOrdered(
-      ev, keyCols, orderCols, out = outType)(
-      () => new St)(
-      (st, r) => {
-        val c = classify(st.prev, r)
-        st.prev = r
-        st.rows(st.sc.feed(c,
-          (r.getLong(idIdx),
-            if (r.isNullAt(mIdx)) null
-            else java.lang.Long.valueOf(r.getLong(mIdx)))))
-      })(
-      st => st.rows(st.sc.finish()))
-  }
+      classify: RowMatcher.Classify): DataFrame =
+    matchFold(ev, keyCols, orderCols, new RowMatcher.Skips(components,
+      skip, classified(ev, idCol, measureCol),
+      RowMatcher.VarNav(components.map(_._1).toIndexedSeq), classify))
 
-  /** ALL ROWS PER MATCH for skip-mode patterns (round 11): every row
-    * of every confirmed match emits (keyCols..., match_seq,
-    * ord_in_match, idCol value, var) where `var` is the NAME of the
-    * component the row mapped to — java.regex's group assignment from
-    * the same priority-order DFS the measures and skip resolution use
-    * (SQL:2016's CLASSIFIER() at pattern-variable grain). Composes
-    * with every skip mode; under an overlapping skip a shared row
-    * emits once PER MATCH it participates in, with that match's
-    * ordinal and label. Same bounds as [[matchSpansSkip]]. */
+  /** ALL ROWS PER MATCH for skip-mode patterns — behind ev_vshape_rows /
+    * api.Events.matchRowsSkipBy: every matched row as (keyCols...,
+    * match_seq, ord_in_match, id, var), `var` the component the row
+    * mapped to (SQL:2016 CLASSIFIER() at variable grain); under an
+    * overlapping skip a shared row emits once per match. */
   private[graft] def matchRowsSkip(
       ev: DataFrame, components: Seq[(String, String)],
-      skip: graft.functions.RowPattern.SkipMode,
+      skip: RowPattern.SkipMode,
       keyCols: Seq[String], orderCols: Seq[String], idCol: String)(
-      classify: (org.apache.spark.sql.Row,
-        org.apache.spark.sql.Row) => Char): DataFrame = {
-    val sp = new graft.functions.RowPattern.SkipProgram(components)
-    val idIdx = ev.schema.fieldIndex(idCol)
-    val names = components.map(_._1).toIndexedSeq
-    final class St {
-      val sc = new graft.functions.RowPattern.SkipScanner[Long](sp, skip)
-      var prev: org.apache.spark.sql.Row = _
-      var seq = 0L
-      def rows(ms: List[graft.functions.RowPattern.SkipMatch[Long]])
-          : List[Seq[Any]] =
-        ms.flatMap { m =>
-          seq += 1
-          names.indices.flatMap { ci =>
-            val base = m.bounds(ci)
-            m.comp(ci).zipWithIndex.map { case (id, off) =>
-              Seq(Long.box(seq), Long.box(base + off + 1L), Long.box(id),
-                names(ci))
-            }
-          }
-        }
-    }
-    graft.api.Folds.flatFoldOrdered(
-      ev, keyCols, orderCols,
-      out = new org.apache.spark.sql.types.StructType()
-        .add("match_seq", org.apache.spark.sql.types.LongType)
-        .add("ord_in_match", org.apache.spark.sql.types.LongType)
-        .add("id", org.apache.spark.sql.types.LongType)
-        .add("var", org.apache.spark.sql.types.StringType))(
-      () => new St)(
-      (st, r) => {
-        val c = classify(st.prev, r)
-        st.prev = r
-        st.rows(st.sc.feed(c, r.getLong(idIdx)))
-      })(
-      st => st.rows(st.sc.finish()))
-  }
-
-  /** AFTER MATCH SKIP TO NEXT ROW — the OTHER SQL:2016 skip mode
-    * (matchCountsOf is SKIP PAST LAST ROW): per entity, the number of
-    * rows where a match STARTS, overlapping matches counted — exactly
-    * `Matcher.region(i, n).lookingAt()` per position (pinned in
-    * RowPatternSpec). Engine: [[graft.functions.RowPattern
-    * .StartDetector]] — a subset simulation of the REVERSED NFA with
-    * a start injected at every position — folded over the entity's
-    * events in DESCENDING (us, event_id) order (the fold's secondary
-    * sort on negated columns). Reversed, "some anchored match exists"
-    * is pure reachability: per-entity state is ONE O(|pattern|)-bit
-    * liveness set for ANY pattern — no speculation chain, no depth
-    * cap — so this mode is bounded on inputs where even find()
-    * counting needs the cap. */
-  private[graft] def overlapCountsOf(ev: DataFrame,
-                                     pattern: String): DataFrame = {
-    val prog = graft.functions.RowPattern.compile(pattern)
-    // eager construction validates the non-nullable contract at plan
-    // time (an empty match would start at every row)
-    new graft.functions.RowPattern.StartDetector(prog)
-    final class St {
-      val det = new graft.functions.RowPattern.StartDetector(prog)
-      var count = 0L
-    }
-    graft.api.Folds.foldOrdered(
-      ev.toDF("user_id", "us", "event_id", "code")
-        .withColumn("neg_us", -col("us"))
-        .withColumn("neg_id", -col("event_id")),
-      keyCols = Seq("user_id"), orderCols = Seq("neg_us", "neg_id"),
-      out = new org.apache.spark.sql.types.StructType()
-        .add("n_starts", org.apache.spark.sql.types.LongType))(
-      () => new St)(
-      (st, r) => {
-        val code = r.getString(3)
-        if (code != null) {
-          require(code.length == 1,
-            "overlap mode needs exactly one code char per event")
-          if (st.det.feed(code.charAt(0))) st.count += 1
-        }
-        st
-      })(
-      st => Seq(java.lang.Long.valueOf(st.count)))
-  }
-
-  /** Row-pattern MEASURES (SQL:2016 MATCH_RECOGNIZE MEASURES clause,
-    * ONE ROW PER MATCH output) — the engine behind ev_match_measures /
-    * api.Events.matchMeasures: the matchSpansOf fold (same machine,
-    * same minLivePos-pruned position→event ring), but the ring also
-    * carries each event's measure value and every confirmed span
-    * emits ONE aggregate row — (match_seq, start_us, start_event_id,
-    * end_us, end_event_id, n_events, sum_cents) — computed over the
-    * ring slice the match covers, the MEASURES set FIRST(ts)/LAST(ts)
-    * /COUNT(*)/SUM(value) expressed at the match grain. Aggregation
-    * happens as spans confirm, on the bounded ring — matched rows are
-    * never re-shuffled or re-joined to compute their measures, so the
-    * whole clause costs the one entity-keyed shuffle the count fold
-    * already pays. Same contract as span mode: terminator-disjoint
-    * pattern (loud failure otherwise), exactly one code char per
-    * event; per-entity memory O(|pattern| + longest live match). */
-  private[graft] def matchMeasuresOf(ev: DataFrame,
-                                     pattern: String): DataFrame = {
-    val prog = graft.functions.RowPattern.compile(pattern)
-    require(graft.functions.RowPattern.terminatorDisjoint(prog),
-      s"MEASURES needs a terminator-disjoint pattern; " +
-        s"'$pattern' is not — use match counting (matchCountsOf)")
-    final class St {
-      val ring = new graft.functions.RowPattern.SpanRing[
-        (Long, Long, Long)](
-        new graft.functions.RowPattern.MatchCounter(prog, trackSpans = true))
-      var seq = 0L // per-entity match ordinal, in start order
-      def measures(sp: (Long, Long)): Seq[Any] = {
-        seq += 1
-        val evs = ring.slice(sp)
-        var sum = 0L
-        evs.foreach(sum += _._3)
-        val (sus, sid, _) = evs.head
-        val (eus, eid, _) = evs.last
-        Seq(Long.box(seq), Long.box(sus), Long.box(sid), Long.box(eus),
-          Long.box(eid), Long.box(evs.length.toLong), Long.box(sum))
-      }
-    }
-    graft.api.Folds.flatFoldOrdered(
-      ev.toDF("user_id", "us", "event_id", "code", "v_cents"),
-      keyCols = Seq("user_id"), orderCols = Seq("us", "event_id"),
-      out = new org.apache.spark.sql.types.StructType()
-        .add("match_seq", org.apache.spark.sql.types.LongType)
-        .add("start_us", org.apache.spark.sql.types.LongType)
-        .add("start_event_id", org.apache.spark.sql.types.LongType)
-        .add("end_us", org.apache.spark.sql.types.LongType)
-        .add("end_event_id", org.apache.spark.sql.types.LongType)
-        .add("n_events", org.apache.spark.sql.types.LongType)
-        .add("sum_cents", org.apache.spark.sql.types.LongType))(
-      () => new St)(
-      (st, r) => {
-        val code = r.getString(3)
-        if (code == null) Nil
-        else {
-          require(code.length == 1,
-            "MEASURES mode needs exactly one code char per event")
-          val out = st.ring.feed((r.getLong(1), r.getLong(2),
-            if (r.isNullAt(4)) 0L else r.getLong(4)),
-            code.charAt(0)).map(st.measures)
-          st.ring.prune()
-          out
-        }
-      })(
-      st => st.ring.finishSpans().map(st.measures))
-  }
+      classify: RowMatcher.Classify): DataFrame =
+    matchFold(ev, keyCols, orderCols, new RowMatcher.Skips(components,
+      skip, classified(ev, idCol),
+      RowMatcher.Labeled(components.map(_._1).toIndexedSeq), classify))
 
   /** Pairwise audience overlap of an (user_id, event_type) frame —
     * the helper behind ev_segment_overlap; the incidence dedups

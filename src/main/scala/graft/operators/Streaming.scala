@@ -127,14 +127,14 @@ object Streaming extends graft.QuerySet {
           max(expr("unix_micros(ts)")).as("max_ts_us"))
         .orderBy("user_id")),
 
-    // Batch twin of the streaming CEP matcher (streaming/CepMatcher —
-    // the `view (click|other)* purchase` one-bit DFA run as
-    // flatMapGroupsWithState): the per-user match counts after
-    // draining the whole feed, computed here with the batch NFA fold
-    // (the ev_match_recognize machinery before its histogram — same
-    // ordered per-user fold, O(|pattern|) state). CepMatcherSpec
-    // asserts the stream fold, the batch fold, and this twin agree
-    // user-for-user, including across a checkpoint restart. One
+    // Batch twin of the streaming CEP matcher (streaming/CepPattern
+    // .matches over `view (click|other)* purchase`, the same count
+    // matcher run as flatMapGroupsWithState state): the per-user match
+    // counts after draining the whole feed, computed here with the
+    // batch fold (the ev_match_recognize machinery before its
+    // histogram — same ordered per-user fold, O(|pattern|) state).
+    // CepPatternSpec asserts the stream, the batch fold, and this twin
+    // agree user-for-user, including across a checkpoint restart. One
     // user-keyed shuffle; per-user state O(1)-bounded in BOTH paths
     // because the funnel pattern is terminator-disjoint
     // (RowPattern.terminatorDisjoint — by construction, not by test).
@@ -250,7 +250,7 @@ object Streaming extends graft.QuerySet {
         |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
 
     // same (ts, event_id) total order and the same leftmost /
-    // non-overlapping / greedy scan as the DFA it twins
+    // non-overlapping / greedy scan as the matcher it twins
     "t10_cep_twin" ->
       """WITH e AS (
         |  SELECT user_id, epoch_us(ts) AS us, event_id,

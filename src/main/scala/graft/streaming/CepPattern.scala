@@ -1,21 +1,27 @@
 package graft.streaming
 
 import scala.collection.mutable.ArrayBuffer
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders,
+  Row, SparkSession}
+import org.apache.spark.sql.functions.{array, col, inline, lit, struct,
+  unix_micros}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.functions.RowPattern
-import graft.streaming.CepMatcher.CepEvent
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import graft.functions.{RowMatcher, RowPattern}
 
-/** Streaming MATCH_RECOGNIZE for ARBITRARY row patterns — the general
-  * form of [[CepMatcher]] (which hard-codes the funnel as a one-bit
-  * DFA): the [[RowPattern.MatchCounter]] speculation chain itself is
-  * the per-key state, carried through `flatMapGroupsWithState` under
-  * java serialization, so the SAME machine that backs the batch fold
-  * (operators/EventAnalytics.matchCountsOf, oracle-checked as
-  * `ev_match_recognize` / `t10_cep_twin`) runs incrementally with
-  * checkpointed state and survives restart like any stateful query —
-  * CepPatternSpec twin-pins stream-with-restart against the batch fold
-  * for disjoint AND non-disjoint patterns.
+/** Streaming MATCH_RECOGNIZE for ARBITRARY row patterns: each output
+  * mode's [[RowMatcher]] — the same per-entity step the batch folds in
+  * operators/EventAnalytics run (oracle-checked as `ev_match_recognize`,
+  * `t10_cep_twin`, `ev_updown_*`, `ev_vshape_*`) — rides
+  * `flatMapGroupsWithState` as java-serialized per-key state, so every
+  * mode runs incrementally with checkpointed state and survives restart
+  * like any stateful query. One private driver owns the event-time
+  * projection, the per-batch sort, the ordering guard and the state
+  * update, and never calls the matcher's `finish`: only CONFIRMED
+  * matches emit. CepPatternSpec twin-pins stream-with-restart against
+  * the batch folds for disjoint AND non-disjoint patterns, and
+  * CepTraceSpec runs every mode over generated traces against its fold.
   *
   * ORDERING GUARD (round 10 — violation is never a silent miscount):
   * matches are defined over each key's EVENT-TIME order (ts_us,
@@ -91,6 +97,12 @@ object CepPattern extends Serializable {
     """CASE event_type WHEN 'view' THEN 'v' WHEN 'click' THEN 'c'
       |WHEN 'purchase' THEN 'p' ELSE 'o' END""".stripMargin
 
+  /** One coded event — the shape the code-column entry points project
+    * a parsed stream to (`ts_us` = unix_micros(ts), `code` = codeExpr;
+    * the MEASURES form adds its value as `v`). */
+  final case class CepEvent(user_id: Long, event_id: Long, ts_us: Long,
+                            code: String)
+
   /** Per-key emission: the match count as of this batch plus the
     * running count of events dropped by the `"drop"` lateness policy
     * (always 0 under `"fail"`). */
@@ -113,78 +125,16 @@ object CepPattern extends Serializable {
                                event_id: Long, code: String)
 
   /** One emitted row per confirmed match with its MEASURES (streaming
-    * MEASURES, round 11): FIRST/LAST event coordinates, COUNT(*) of
-    * matched events, and the exact long sum of the value expression
-    * over them. */
+    * MEASURES): FIRST/LAST event coordinates, COUNT(*) of matched
+    * events, and the exact long sum of the value expression over
+    * them. */
   final case class CepMeasureMatch(user_id: Long, match_seq: Long,
                                    start_us: Long, start_event_id: Long,
                                    end_us: Long, end_event_id: Long,
                                    n_events: Long, sum_value: Long)
 
-  /** The ordering-guard fields every CEP state carries: the last-FED
-    * event-time frontier, the key's high-water mark, the
-    * lateness-bounded reorder buffer, and the late-drop counter. */
-  private[graft] sealed abstract class GuardedState[T] extends Serializable {
-    var lastTs: Long = Long.MinValue
-    var lastId: Long = Long.MinValue
-    var maxSeenTs: Long = Long.MinValue
-    var buffer: ArrayBuffer[(Long, Long, T)] = ArrayBuffer.empty
-    var dropped: Long = 0L
-  }
-
-  /** Checkpointed per-key state for [[matches]]: the speculation-chain
-    * machine plus the last emitted pair (emit-on-change). */
-  private[graft] final class PatternState(
-      val m: RowPattern.MatchCounter) extends GuardedState[String] {
-    var emittedMatches: Long = -1L
-    var emittedDropped: Long = -1L
-  }
-
-  /** Checkpointed per-key state for [[matchSpans]]: the span-mode
-    * machine, the position→event ring (char position of ring(0) is
-    * `base` — pruned to the machine's minLivePos like the batch fold),
-    * and the per-key match ordinal. */
-  private[graft] final class SpanState(
-      val ring: RowPattern.SpanRing[(Long, Long)])
-      extends GuardedState[String] {
-    var seq: Long = 0L
-  }
-
-  /** Checkpointed per-key state for [[matchRows]]: the span-mode
-    * machine with a ring that also carries each event's code char, so
-    * a confirmed span can emit its covered events. */
-  private[graft] final class RowsState(
-      val ring: RowPattern.SpanRing[(Long, Long, String)])
-      extends GuardedState[String] {
-    var seq: Long = 0L
-  }
-
-  /** Checkpointed per-key state for [[matchMeasures]]: the span-mode
-    * machine with a ring carrying each event's measure value; the
-    * reorder buffer holds (code, value) pairs. */
-  private[graft] final class MeasureState(
-      val ring: RowPattern.SpanRing[(Long, Long, Long)])
-      extends GuardedState[(String, Long)] {
-    var seq: Long = 0L
-  }
-
-  /** The parsed-event shape with a measure value (matchMeasures). */
-  private[graft] final case class CepValEvent(user_id: Long,
-                                              event_id: Long, ts_us: Long,
-                                              code: String, v: Long)
-
-  /** Checkpointed per-key state for [[matchSpansBy]]: the span-mode
-    * machine + ring, the PREV row (the DEFINE/PREV window), and the
-    * reorder buffer holding whole rows (classification must wait for
-    * event-time release). */
-  private[graft] final class ClassifiedSpanState(
-      val ring: RowPattern.SpanRing[(Long, Long)])
-      extends GuardedState[org.apache.spark.sql.Row] {
-    var prev: org.apache.spark.sql.Row = _
-    var seq: Long = 0L
-  }
-
-  /** One emitted row per confirmed SKIP-mode match ([[matchSkip]]). */
+  /** One emitted row per confirmed SKIP-mode match ([[matchSkip]]), or
+    * per classified span ([[matchSpansBy]]). */
   final case class CepSkipMatch(user_id: Long, match_seq: Long,
                                 start_us: Long, start_event_id: Long,
                                 end_us: Long, end_event_id: Long,
@@ -208,82 +158,60 @@ object CepPattern extends Serializable {
                              var_name: String)
 
   /** One emitted row per (confirmed match, pattern component) pair —
-    * streaming FIRST/LAST VALUE NAVIGATION ([[matchVarNavBy]], round
-    * 14): the measure value of the component's first and last matched
-    * rows, None both when the component matched ZERO rows (SQL:2016
+    * streaming FIRST/LAST VALUE NAVIGATION ([[matchVarNavBy]]): the
+    * measure value of the component's first and last matched rows,
+    * None both when the component matched ZERO rows (SQL:2016
     * navigation-on-empty) and when the boundary row's measure is
     * itself NULL (navigation is value-preserving — it reports the
     * value, unlike SUM which ignores NULLs). Long form like
-    * [[CepVarMeasure]] (the component list is a runtime argument);
-    * start_id/end_id are the whole match's bounds. */
+    * [[CepVarMeasure]]; start_id/end_id are the whole match's bounds. */
   final case class CepVarNav(user_id: Long, match_seq: Long,
                              start_id: Long, end_id: Long,
                              var_name: String,
                              first_value: Option[Long],
                              last_value: Option[Long])
 
-  /** Checkpointed per-key state for [[matchVarNavBy]]: the SkipScanner
-    * over (id, Option[measure]) payloads — the Option carries NULL
-    * measures through the ring un-coerced — plus the PREV row
-    * (DEFINE/PREV window) and the per-key match ordinal. */
-  private[graft] final class VarNavState(
-      val sc: RowPattern.SkipScanner[(Long, Option[Long])])
-      extends GuardedState[org.apache.spark.sql.Row] {
-    var prev: org.apache.spark.sql.Row = _
-    var seq: Long = 0L
-  }
-
-  /** Checkpointed per-key state for [[matchVarMeasuresBy]]: the
-    * SkipScanner over (id, measure) payloads, the PREV row
-    * (DEFINE/PREV window), and the per-key match ordinal; the reorder
-    * buffer holds whole rows (classification and the measure read must
-    * wait for event-time release). */
-  private[graft] final class VarMeasureState(
-      val sc: RowPattern.SkipScanner[(Long, Long)])
-      extends GuardedState[org.apache.spark.sql.Row] {
-    var prev: org.apache.spark.sql.Row = _
-    var seq: Long = 0L
-  }
-
-  /** Checkpointed per-key state for [[matchRowsSkipBy]]: the
-    * SkipScanner over id payloads plus the PREV row and ordinal. */
-  private[graft] final class VarRowState(
-      val sc: RowPattern.SkipScanner[Long])
-      extends GuardedState[org.apache.spark.sql.Row] {
-    var prev: org.apache.spark.sql.Row = _
-    var seq: Long = 0L
-  }
-
   /** One emitted row per EVENT of each confirmed match with its
     * RUNNING and FINAL sums — streaming ALL ROWS with RUNNING/FINAL
-    * measures ([[matchRowsRunningBy]], round 13): `running_sum` is the
-    * inclusive prefix sum of the measure inside the match,
-    * `final_sum` the whole match's total (equal on the last row);
-    * RUNNING COUNT(*) is `ord_in_match` itself. */
+    * measures ([[matchRowsRunningBy]]): `running_sum` is the inclusive
+    * prefix sum of the measure inside the match, `final_sum` the whole
+    * match's total (equal on the last row); RUNNING COUNT(*) is
+    * `ord_in_match` itself. */
   final case class CepRunningRow(user_id: Long, match_seq: Long,
                                  ord_in_match: Long, id: Long,
                                  cls: String, running_sum: Long,
                                  final_sum: Long)
 
-  /** Checkpointed per-key state for [[matchRowsRunningBy]]: the
-    * span-mode machine with a ring carrying (id, cls, value) per
-    * event, plus the PREV row (DEFINE/PREV window) and ordinal; the
-    * reorder buffer holds whole rows. */
-  private[graft] final class RunningRowState(
-      val ring: RowPattern.SpanRing[(Long, String, Long)])
-      extends GuardedState[org.apache.spark.sql.Row] {
-    var prev: org.apache.spark.sql.Row = _
-    var seq: Long = 0L
+  /** Checkpointed per-key state: the matcher's state (engine, PREV row,
+    * match ordinal) plus the ordering-guard fields — the last-FED
+    * event-time frontier, the key's high-water mark, the
+    * lateness-bounded reorder buffer of whole rows (classification
+    * waits for event-time release), and the late-drop counter. */
+  private[graft] class GuardedState[E](val m: RowMatcher.State[E])
+      extends Serializable {
+    var lastTs: Long = Long.MinValue
+    var lastId: Long = Long.MinValue
+    var maxSeenTs: Long = Long.MinValue
+    var buffer: ArrayBuffer[(Long, Long, Row)] = ArrayBuffer.empty
+    var dropped: Long = 0L
   }
 
-  /** Checkpointed per-key state for [[matchSkip]]: the SkipScanner —
-    * the buffered current attempt + anchored thread set — carried
-    * whole through the state store (everything in it is
-    * java-serializable by construction). */
-  private[graft] final class SkipState(
-      val sc: RowPattern.SkipScanner[(Long, Long)])
-      extends GuardedState[String] {
-    var seq: Long = 0L
+  /** Count mode's state adds the last emitted pair (emit-on-change). */
+  private[graft] final class CountState[E](m: RowMatcher.State[E])
+      extends GuardedState[E](m) {
+    var emittedMatches: Long = -1L
+    var emittedDropped: Long = -1L
+  }
+
+  /** The ordering guard's arguments, validated at plan time. */
+  private final case class Guard(allowedLatenessUs: Long, onLate: String,
+                                 maxBufferedEvents: Int) {
+    require(allowedLatenessUs >= 0L,
+      s"allowedLatenessUs must be >= 0, got $allowedLatenessUs")
+    require(onLate == "fail" || onLate == "drop",
+      s"onLate must be 'fail' or 'drop', got '$onLate'")
+    require(maxBufferedEvents > 0,
+      s"maxBufferedEvents must be > 0, got $maxBufferedEvents")
   }
 
   /** Admit a batch of events through the ordering guard: record the
@@ -303,19 +231,19 @@ object CepPattern extends Serializable {
     * already below the running watermark out of the buffer; only
     * events genuinely inside the lateness window can refuse an
     * arrival. */
-  private def admit[T](st: GuardedState[T], userId: Long,
-                       evs: Array[(Long, Long, T)], allowedLatenessUs: Long,
-                       onLate: String,
-                       maxBufferedEvents: Int): Seq[(Long, Long, T)] = {
+  private def admit(st: GuardedState[_], userId: Long,
+                    evs: Array[(Long, Long, Row)], g: Guard,
+                    skips: Row => Boolean): Seq[(Long, Long, Row)] = {
+    import g.{allowedLatenessUs, maxBufferedEvents, onLate}
     // events moved out of the buffer by the cap's interleaved release
     // pass: NOT fed mid-loop (feeding would advance the frontier and
     // could misjudge a later same-batch event as late) — they merge
     // and sort with the end-of-call release, so the released set is
     // exactly what one end-of-call pass would release
-    val early = ArrayBuffer.empty[(Long, Long, T)]
+    val early = ArrayBuffer.empty[(Long, Long, Row)]
     evs.foreach { case (ts, id, payload) =>
       if (ts > st.maxSeenTs) st.maxSeenTs = ts
-      if (payload != null) {
+      if (!skips(payload)) {
         val behindFrontier = ts < st.lastTs ||
           (ts == st.lastTs && id <= st.lastId)
         if (behindFrontier) {
@@ -382,7 +310,7 @@ object CepPattern extends Serializable {
       // spec-pinned)
       val (rel, keep) =
         if (allowedLatenessUs == 0L)
-          (sorted, ArrayBuffer.empty[(Long, Long, T)])
+          (sorted, ArrayBuffer.empty[(Long, Long, Row)])
         else sorted.partition(_._1 < watermark)
       early ++= rel
       st.buffer = keep
@@ -398,360 +326,199 @@ object CepPattern extends Serializable {
     }
   }
 
-  private def requireGuardArgs(allowedLatenessUs: Long, onLate: String,
-                               maxBufferedEvents: Int): Unit = {
-    require(allowedLatenessUs >= 0L,
-      s"allowedLatenessUs must be >= 0, got $allowedLatenessUs")
-    require(onLate == "fail" || onLate == "drop",
-      s"onLate must be 'fail' or 'drop', got '$onLate'")
-    require(maxBufferedEvents > 0,
-      s"maxBufferedEvents must be > 0, got $maxBufferedEvents")
+  /** Run `matcher` per key over `events` — the one streaming driver.
+    * Projects the event-time order as `__ts_us`, sorts each key's batch
+    * by (ts_us, tieCol), admits it through the ordering guard, feeds
+    * the released rows, and updates the state; the emitted rows are
+    * (user_id, matcher fields...). Count mode adds `n_late_dropped` and
+    * emits, on change only, the count as if the stream ended here. The
+    * matcher reads ids from `tieCol`, micros from `__ts_us`, and codes
+    * and measures from `codeCol` / `measureCol` when given. */
+  private def drive[E](events: DataFrame, idCol: String, tieCol: String,
+                       orderUs: Column, g: Guard, codeCol: String = null,
+                       measureCol: String = null)(
+      matcher: RowMatcher.Cols => RowMatcher.Matcher[E]): DataFrame = {
+    val withOrder = events.withColumn("__ts_us", orderUs)
+    val schema = withOrder.schema
+    val idIdx = schema.fieldIndex(idCol)
+    val tieIdx = schema.fieldIndex(tieCol)
+    val usIdx = schema.fieldIndex("__ts_us")
+    def idx(c: String): Int = if (c == null) -1 else schema.fieldIndex(c)
+    val m = matcher(RowMatcher.Cols(usIdx, tieIdx, idx(codeCol),
+      idx(measureCol)))
+    val counting = m.isInstanceOf[RowMatcher.Counts]
+    val fields = StructType(StructField("user_id", LongType) +:
+      m.fields.fields)
+    implicit val outEnc: Encoder[Row] = Encoders.row(
+      if (counting) fields.add("n_late_dropped", LongType) else fields)
+    implicit val stateEnc: Encoder[GuardedState[E]] =
+      Encoders.javaSerialization[GuardedState[E]]
+
+    def update(key: Long, rows: Iterator[Row],
+               state: GroupState[GuardedState[E]]): Iterator[Row] = {
+      val st = state.getOption.getOrElse(
+        if (counting) new CountState(m.init()) else new GuardedState(m.init()))
+      val evs = rows.map(r => (r.getLong(usIdx), r.getLong(tieIdx), r))
+        .toArray.sortBy(e => (e._1, e._2))
+      val out = ArrayBuffer.empty[Row]
+      admit(st, key, evs, g, m.skips).foreach { case (_, _, r) =>
+        m.feed(st.m, r).foreach(f => out += Row.fromSeq(Long.box(key) +: f))
+      }
+      st match {
+        case c: CountState[E @unchecked] =>
+          // count as if the stream ended here: buffered events would
+          // all release at EOF, so they feed a snapshot before finishing
+          val n = m.countIfEnded(c.m, c.buffer.view.map(_._3))
+          if (n != c.emittedMatches || c.dropped != c.emittedDropped) {
+            c.emittedMatches = n
+            c.emittedDropped = c.dropped
+            out += Row(key, n, c.dropped)
+          }
+        case _ => ()
+      }
+      state.update(st)
+      out.iterator
+    }
+
+    withOrder.as(Encoders.row(schema))
+      .groupByKey((r: Row) => r.getLong(idIdx))(Encoders.scalaLong)
+      .flatMapGroupsWithState(OutputMode.Append,
+        GroupStateTimeout.NoTimeout)(update)
+  }
+
+  /** The code-column forms: parsed events projected to the [[CepEvent]]
+    * shape (plus `v` = `valueExpr` when given), keyed by user_id. */
+  private def driveCoded[E](parsed: DataFrame, codeExpr: String, g: Guard,
+                            valueExpr: String = null)(
+      matcher: RowMatcher.Cols => RowMatcher.Matcher[E]): DataFrame =
+    drive(parsed.selectExpr(Seq("user_id", "event_id",
+      "unix_micros(ts) AS ts_us", s"($codeExpr) AS code") ++
+      Option(valueExpr).map(v => s"($v) AS v"): _*),
+      "user_id", "event_id", col("ts_us"), g, "code",
+      if (valueExpr == null) null else "v")(matcher)
+
+  private def driveBy[E](events: DataFrame, idCol: String, tieCol: String,
+                         orderCol: String, g: Guard,
+                         measureCol: String = null)(
+      matcher: RowMatcher.Cols => RowMatcher.Matcher[E]): DataFrame =
+    drive(events, idCol, tieCol, unix_micros(col(orderCol)), g,
+      measureCol = measureCol)(matcher)
+
+  /** The emitted rows as `T`, selecting its fields by name (`renames`:
+    * field → emitted column). */
+  private def typed[T <: Product : TypeTag](df: DataFrame,
+                                            renames: (String, String)*)
+      : Dataset[T] = {
+    val enc = Encoders.product[T]
+    val from = renames.toMap
+    df.select(enc.schema.fieldNames.toIndexedSeq.map(n =>
+      col(from.getOrElse(n, n)).as(n)): _*).as(enc)
   }
 
   /** Wire the matcher over a parsed stream (StreamingIngest.parse
     * output) — or a batch frame with the same columns, where the fold
     * sees each key's whole history at once. Append + NoTimeout: the
-    * machine lives for the query. */
+    * machine lives for the query. Emission is Update-shaped: per key
+    * whose (n_matches, n_late_dropped) changed, the count as if the
+    * stream ended here (a snapshot fed the still-buffered events); at
+    * quiescence the last emission equals the batch fold. */
   def matches(spark: SparkSession, parsed: DataFrame, pattern: String,
               depthCap: Int = 4096,
               codeExpr: String = funnelCode,
               allowedLatenessUs: Long = 0L,
               onLate: String = "fail",
               maxBufferedEvents: Int = DefaultMaxBuffered)
-      : Dataset[CepPatternUpdate] = {
-    requireGuardArgs(allowedLatenessUs, onLate, maxBufferedEvents)
-    val prog = RowPattern.compile(pattern)
-    implicit val stateEnc: Encoder[PatternState] =
-      Encoders.javaSerialization[PatternState]
-    import spark.implicits._
-
-    def update(userId: Long, events: Iterator[CepEvent],
-               state: GroupState[PatternState])
-        : Iterator[CepPatternUpdate] = {
-      val st = state.getOption.getOrElse(
-        new PatternState(new RowPattern.MatchCounter(prog, depthCap)))
-      val evs = events.toArray.sortBy(e => (e.ts_us, e.event_id))
-        .map(e => (e.ts_us, e.event_id, e.code))
-      admit(st, userId, evs, allowedLatenessUs, onLate, maxBufferedEvents)
-        .foreach { case (_, _, code) => st.m.feedAll(code) }
-      state.update(st)
-      // count as if the stream ended here: buffered events would all
-      // release at EOF, so the snapshot feeds them before finishing
-      val snap = st.m.snapshot()
-      st.buffer.foreach { case (_, _, code) => snap.feedAll(code) }
-      val flushed = snap.finish()
-      if (flushed != st.emittedMatches || st.dropped != st.emittedDropped) {
-        st.emittedMatches = flushed
-        st.emittedDropped = st.dropped
-        state.update(st)
-        Iterator.single(CepPatternUpdate(userId, flushed, st.dropped))
-      } else Iterator.empty
-    }
-
-    parsed
-      .selectExpr("user_id", "event_id", "unix_micros(ts) AS ts_us",
-        s"($codeExpr) AS code")
-      .as[CepEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(update)
-  }
-
-  /** Checkpointed per-key state for [[matchesBy]]: the machine, the
-    * key's PREVIOUS event row (the DEFINE/PREV window — classify runs
-    * on release, in event-time order, so the buffer holds whole rows),
-    * and the emit-on-change pair. Rows are GenericRows of the caller's
-    * projected columns — java-serializable like the machine. */
-  private[graft] final class ClassifiedState(
-      val m: RowPattern.MatchCounter)
-      extends GuardedState[org.apache.spark.sql.Row] {
-    var prev: org.apache.spark.sql.Row = _
-    var emittedMatches: Long = -1L
-    var emittedDropped: Long = -1L
-  }
+      : Dataset[CepPatternUpdate] =
+    typed[CepPatternUpdate](driveCoded(parsed, codeExpr,
+      Guard(allowedLatenessUs, onLate, maxBufferedEvents))(
+      new RowMatcher.Counts(pattern, depthCap, _)))
 
   /** Streaming MATCH_RECOGNIZE with DEFINE-style NAVIGATION (PREV) —
     * the streaming twin of the batch matchCountsClassified fold
-    * (oracle-checked as `ev_updown_runs`): the code char is computed
-    * INSIDE the per-key state by `classify(prev, cur)` — `prev` the
-    * key's previous event row in event-time order (null on the key's
-    * first event), carried across micro-batches and restarts — so
-    * predicates over neighbors (`DEFINE U AS price > PREV(price)`)
-    * run streaming with the same ordering guard as [[matches]]: the
-    * reorder buffer holds whole rows (classification must wait for
-    * event-time release), `onLate` fail/drop identically, and
-    * emission is the same emit-on-change count-if-ended-here (the
-    * snapshot feeds the buffered rows through a copy of the prev
-    * window before finishing). `events` must carry `idCol` (LONG),
-    * `tieCol` (LONG), and `orderCol` (TIMESTAMP); `classify` sees the
-    * caller's FULL projected row and must be serializable. */
+    * (oracle-checked as `ev_updown_runs`): the code char is
+    * `classify(prev, cur)` computed INSIDE the per-key state — `prev`
+    * the key's previous event row in event-time order (null on the
+    * key's first event), carried across micro-batches and restarts —
+    * with [[matches]]' ordering guard and emission (the snapshot feeds
+    * the buffered rows through a copy of the prev window). `events`
+    * must carry `idCol` (LONG), `tieCol` (LONG), and `orderCol`
+    * (TIMESTAMP); `classify` sees the caller's FULL projected row and
+    * must be serializable. */
   def matchesBy(spark: SparkSession, events: DataFrame, pattern: String,
                 idCol: String = "user_id", tieCol: String = "event_id",
                 orderCol: String = "ts", depthCap: Int = 4096,
                 allowedLatenessUs: Long = 0L, onLate: String = "fail",
                 maxBufferedEvents: Int = DefaultMaxBuffered)
-               (classify: (org.apache.spark.sql.Row,
-                 org.apache.spark.sql.Row) => Char)
-      : Dataset[CepPatternUpdate] = {
-    requireGuardArgs(allowedLatenessUs, onLate, maxBufferedEvents)
-    val prog = RowPattern.compile(pattern)
-    implicit val stateEnc: Encoder[ClassifiedState] =
-      Encoders.javaSerialization[ClassifiedState]
-    import spark.implicits._
-    val withOrder = events.withColumn("__ts_us",
-      org.apache.spark.sql.functions.unix_micros(
-        org.apache.spark.sql.functions.col(orderCol)))
-    val schema = withOrder.schema
-    val idIdx = schema.fieldIndex(idCol)
-    val tieIdx = schema.fieldIndex(tieCol)
-    val usIdx = schema.fieldIndex("__ts_us")
-    implicit val rowEnc: Encoder[org.apache.spark.sql.Row] =
-      org.apache.spark.sql.Encoders.row(schema)
-
-    def update(userId: Long, rows: Iterator[org.apache.spark.sql.Row],
-               state: GroupState[ClassifiedState])
-        : Iterator[CepPatternUpdate] = {
-      val st = state.getOption.getOrElse(
-        new ClassifiedState(new RowPattern.MatchCounter(prog, depthCap)))
-      val evs = rows.toArray
-        .map(r => (r.getLong(usIdx), r.getLong(tieIdx), r))
-        .sortBy(e => (e._1, e._2))
-      admit(st, userId, evs, allowedLatenessUs, onLate, maxBufferedEvents)
-        .foreach { case (_, _, r) =>
-          st.m.feed(classify(st.prev, r))
-          st.prev = r
-        }
-      state.update(st)
-      val snap = st.m.snapshot()
-      var prev = st.prev
-      st.buffer.foreach { case (_, _, r) =>
-        snap.feed(classify(prev, r)); prev = r
-      }
-      val flushed = snap.finish()
-      if (flushed != st.emittedMatches || st.dropped != st.emittedDropped) {
-        st.emittedMatches = flushed
-        st.emittedDropped = st.dropped
-        state.update(st)
-        Iterator.single(CepPatternUpdate(userId, flushed, st.dropped))
-      } else Iterator.empty
-    }
-
-    withOrder
-      .as(rowEnc)
-      .groupByKey(_.getLong(idIdx))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(update)
-  }
+               (classify: (Row, Row) => Char)
+      : Dataset[CepPatternUpdate] =
+    typed[CepPatternUpdate](driveBy(events, idCol, tieCol, orderCol,
+      Guard(allowedLatenessUs, onLate, maxBufferedEvents))(
+      new RowMatcher.Counts(pattern, depthCap, _, classify)))
 
   /** Streaming ONE ROW PER MATCH: the batch matchSpansOf fold run
     * incrementally — each key's confirmed matches emit exactly once,
-    * as they confirm, carrying the match's first/last event
-    * coordinates and a per-key ordinal in confirmation order. Same
-    * admission guard as [[matches]]; requires a terminator-disjoint
-    * pattern (the span buffers and the ring are only bounded under
-    * that contract) and exactly one code char per event. Per-key
-    * state: the machine + the minLivePos-pruned ring + the reorder
-    * buffer — O(|pattern| + longest live match + declared-lateness
-    * backlog), never the key's history. */
+    * as they confirm, with the match's first/last event coordinates
+    * and a per-key ordinal in confirmation order. Requires a
+    * terminator-disjoint pattern and exactly one code char per event.
+    * Per-key state: the machine + the minLivePos-pruned ring + the
+    * reorder buffer — O(|pattern| + longest live match +
+    * declared-lateness backlog), never the key's history. */
   def matchSpans(spark: SparkSession, parsed: DataFrame, pattern: String,
                  codeExpr: String = funnelCode,
                  allowedLatenessUs: Long = 0L,
                  onLate: String = "fail",
                  maxBufferedEvents: Int = DefaultMaxBuffered)
-      : Dataset[CepSpanMatch] = {
-    requireGuardArgs(allowedLatenessUs, onLate, maxBufferedEvents)
-    val prog = RowPattern.compile(pattern)
-    require(RowPattern.terminatorDisjoint(prog),
-      s"streaming span mode needs a terminator-disjoint pattern; " +
-        s"'$pattern' is not — use matches() (count mode)")
-    implicit val stateEnc: Encoder[SpanState] =
-      Encoders.javaSerialization[SpanState]
-    import spark.implicits._
+      : Dataset[CepSpanMatch] =
+    typed[CepSpanMatch](driveCoded(parsed, codeExpr,
+      Guard(allowedLatenessUs, onLate, maxBufferedEvents))(
+      new RowMatcher.Spans(pattern, _, RowMatcher.PerMatch)))
 
-    def update(userId: Long, events: Iterator[CepEvent],
-               state: GroupState[SpanState])
-        : Iterator[CepSpanMatch] = {
-      val st = state.getOption.getOrElse(new SpanState(
-        new RowPattern.SpanRing[(Long, Long)](
-          new RowPattern.MatchCounter(prog, trackSpans = true))))
-      val evs = events.toArray.sortBy(e => (e.ts_us, e.event_id))
-        .map(e => (e.ts_us, e.event_id, e.code))
-      val out = ArrayBuffer.empty[CepSpanMatch]
-      admit(st, userId, evs, allowedLatenessUs, onLate, maxBufferedEvents)
-        .foreach { case (ts, id, code) =>
-          require(code.length == 1,
-            "streaming span mode needs exactly one code char per event")
-          st.ring.feed((ts, id), code.charAt(0)).foreach { sp =>
-            st.seq += 1
-            val (sus, sid) = st.ring.first(sp)
-            val (eus, eid) = st.ring.last(sp)
-            out += CepSpanMatch(userId, st.seq, sus, sid, eus, eid)
-          }
-          st.ring.prune()
-        }
-      state.update(st)
-      out.iterator
-    }
-
-    parsed
-      .selectExpr("user_id", "event_id", "unix_micros(ts) AS ts_us",
-        s"($codeExpr) AS code")
-      .as[CepEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(update)
-  }
-
-  /** Streaming ONE ROW PER MATCH with DEFINE-style NAVIGATION (round
-    * 11 — classified × span mode over a stream): the code char is
-    * computed inside the checkpointed per-key state by
-    * `classify(prev, cur)` — prev carried across micro-batches and
-    * restarts like [[matchesBy]] — and fed to the span-mode machine +
-    * ring, so `DEFINE U AS price > PREV(price)` composes with
-    * exactly-once confirmed-span emission. Emits (user_id, match_seq,
-    * start_id, end_id, n_events) with ids from `tieCol` — the
-    * streaming twin of the batch matchSpansClassified fold
-    * (restart-twin-pinned in CepPatternSpec). Requires a
-    * terminator-disjoint pattern; same ordering guard and buffer cap
-    * as [[matchesBy]] (the reorder buffer holds whole rows). */
+  /** Streaming ONE ROW PER MATCH with DEFINE-style NAVIGATION: the
+    * classifier runs inside the checkpointed per-key state (prev
+    * carried across micro-batches and restarts, as in [[matchesBy]])
+    * and feeds [[matchSpans]]' machine + ring. Emits (user_id,
+    * match_seq, start_us, start_event_id, end_us, end_event_id,
+    * n_events) with coordinates from (`orderCol`, `tieCol`) — the
+    * streaming twin of the batch matchSpansClassified fold. Requires a
+    * terminator-disjoint pattern. */
   def matchSpansBy(spark: SparkSession, events: DataFrame,
                    pattern: String,
                    idCol: String = "user_id", tieCol: String = "event_id",
                    orderCol: String = "ts",
                    allowedLatenessUs: Long = 0L, onLate: String = "fail",
                    maxBufferedEvents: Int = DefaultMaxBuffered)
-                  (classify: (org.apache.spark.sql.Row,
-                    org.apache.spark.sql.Row) => Char)
-      : Dataset[CepSkipMatch] = {
-    requireGuardArgs(allowedLatenessUs, onLate, maxBufferedEvents)
-    val prog = RowPattern.compile(pattern)
-    require(RowPattern.terminatorDisjoint(prog),
-      s"streaming classified span mode needs a terminator-disjoint " +
-        s"pattern; '$pattern' is not — use matchesBy() (count mode)")
-    implicit val stateEnc: Encoder[ClassifiedSpanState] =
-      Encoders.javaSerialization[ClassifiedSpanState]
-    import spark.implicits._
-    val withOrder = events.withColumn("__ts_us",
-      org.apache.spark.sql.functions.unix_micros(
-        org.apache.spark.sql.functions.col(orderCol)))
-    val schema = withOrder.schema
-    val idIdx = schema.fieldIndex(idCol)
-    val tieIdx = schema.fieldIndex(tieCol)
-    val usIdx = schema.fieldIndex("__ts_us")
-    implicit val rowEnc: Encoder[org.apache.spark.sql.Row] =
-      org.apache.spark.sql.Encoders.row(schema)
+                  (classify: (Row, Row) => Char)
+      : Dataset[CepSkipMatch] =
+    typed[CepSkipMatch](driveBy(events, idCol, tieCol, orderCol,
+      Guard(allowedLatenessUs, onLate, maxBufferedEvents))(
+      new RowMatcher.Spans(pattern, _, RowMatcher.PerMatch, classify)))
 
-    def update(userId: Long, rows: Iterator[org.apache.spark.sql.Row],
-               state: GroupState[ClassifiedSpanState])
-        : Iterator[CepSkipMatch] = {
-      val st = state.getOption.getOrElse(new ClassifiedSpanState(
-        new RowPattern.SpanRing[(Long, Long)](
-          new RowPattern.MatchCounter(prog, trackSpans = true))))
-      val evs = rows.toArray
-        .map(r => (r.getLong(usIdx), r.getLong(tieIdx), r))
-        .sortBy(e => (e._1, e._2))
-      val out = ArrayBuffer.empty[CepSkipMatch]
-      admit(st, userId, evs, allowedLatenessUs, onLate, maxBufferedEvents)
-        .foreach { case (ts, id, r) =>
-          val c = classify(st.prev, r)
-          st.prev = r
-          st.ring.feed((ts, id), c).foreach { sp =>
-            st.seq += 1
-            val (sus, sid) = st.ring.first(sp)
-            val (eus, eid) = st.ring.last(sp)
-            out += CepSkipMatch(userId, st.seq, sus, sid, eus, eid,
-              sp._2 - sp._1)
-          }
-          st.ring.prune()
-        }
-      state.update(st)
-      out.iterator
-    }
-
-    withOrder
-      .as(rowEnc)
-      .groupByKey(_.getLong(idIdx))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(update)
-  }
-
-  /** Streaming ALL ROWS PER MATCH (round 11): the batch matchRowsOf
-    * fold run incrementally — when a match CONFIRMS, every event it
-    * covers emits as its own row (match_seq in confirmation order,
-    * ord_in_match inside the match), exactly once, Append-shaped like
-    * [[matchSpans]] (a span confirms once; its rows are final — no
-    * retraction, no re-emission). The ring already holds the covered
-    * events' payloads at confirmation time (they are ≥ minLivePos
-    * while the span is live), so per-event emission costs nothing
-    * extra in state: machine + ring + reorder buffer, same bounds and
-    * admission guard as [[matchSpans]]; requires a terminator-disjoint
-    * pattern and exactly one code char per event. At quiescence the
-    * emitted set equals the batch matchRowsOf fold (restart-twin-
-    * pinned in CepPatternSpec). */
+  /** Streaming ALL ROWS PER MATCH: when a match CONFIRMS, every event
+    * it covers emits as its own row (match_seq in confirmation order,
+    * ord_in_match inside the match), exactly once. The ring already
+    * holds the covered events at confirmation, so per-event emission
+    * costs nothing extra in state. Same bounds and contract as
+    * [[matchSpans]]; at quiescence the emitted set equals the batch
+    * matchRowsOf fold. */
   def matchRows(spark: SparkSession, parsed: DataFrame, pattern: String,
                 codeExpr: String = funnelCode,
                 allowedLatenessUs: Long = 0L,
                 onLate: String = "fail",
                 maxBufferedEvents: Int = DefaultMaxBuffered)
-      : Dataset[CepRowMatch] = {
-    requireGuardArgs(allowedLatenessUs, onLate, maxBufferedEvents)
-    val prog = RowPattern.compile(pattern)
-    require(RowPattern.terminatorDisjoint(prog),
-      s"streaming ALL ROWS mode needs a terminator-disjoint pattern; " +
-        s"'$pattern' is not — use matches() (count mode)")
-    implicit val stateEnc: Encoder[RowsState] =
-      Encoders.javaSerialization[RowsState]
-    import spark.implicits._
+      : Dataset[CepRowMatch] =
+    typed[CepRowMatch](driveCoded(parsed, codeExpr,
+      Guard(allowedLatenessUs, onLate, maxBufferedEvents))(
+      new RowMatcher.Spans(pattern, _, RowMatcher.AllRows)),
+      "event_id" -> "id", "code" -> "cls")
 
-    def update(userId: Long, events: Iterator[CepEvent],
-               state: GroupState[RowsState])
-        : Iterator[CepRowMatch] = {
-      val st = state.getOption.getOrElse(new RowsState(
-        new RowPattern.SpanRing[(Long, Long, String)](
-          new RowPattern.MatchCounter(prog, trackSpans = true))))
-      val evs = events.toArray.sortBy(e => (e.ts_us, e.event_id))
-        .map(e => (e.ts_us, e.event_id, e.code))
-      val out = ArrayBuffer.empty[CepRowMatch]
-      admit(st, userId, evs, allowedLatenessUs, onLate, maxBufferedEvents)
-        .foreach { case (ts, id, code) =>
-          require(code.length == 1,
-            "streaming ALL ROWS mode needs exactly one code char per event")
-          st.ring.feed((ts, id, code), code.charAt(0)).foreach { sp =>
-            st.seq += 1
-            st.ring.slice(sp).zipWithIndex.foreach {
-              case ((eus, eid, ec), ord) =>
-                out += CepRowMatch(userId, st.seq, ord + 1L, eus, eid, ec)
-            }
-          }
-          st.ring.prune()
-        }
-      state.update(st)
-      out.iterator
-    }
-
-    parsed
-      .selectExpr("user_id", "event_id", "unix_micros(ts) AS ts_us",
-        s"($codeExpr) AS code")
-      .as[CepEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(update)
-  }
-
-  /** Streaming MEASURES (round 11 — completes the streaming output-
-    * mode matrix: counts, spans, ALL ROWS, classified counts, and now
-    * per-match aggregates): when a match confirms, ONE row emits with
-    * its MEASURES — FIRST/LAST event coordinates, COUNT(*) of matched
-    * events, and the exact long sum of `valueExpr` over them —
-    * aggregated off the bounded ring at confirmation, exactly once,
-    * Append-shaped like [[matchSpans]]. `valueExpr` is any SQL
-    * expression over the parsed columns yielding a LONG (pre-scale
-    * money to cents — the decimal-exactness contract; the default is
-    * the batch ev_match_measures cents cast). Same admission guard,
-    * buffer hard cap, confirmation timing, and terminator-disjoint +
-    * one-char-code contract as [[matchSpans]]; at quiescence the
-    * emitted set equals the batch matchMeasuresOf fold (restart-twin-
-    * pinned in CepPatternSpec). */
+  /** Streaming MEASURES: when a match confirms, ONE row emits with
+    * FIRST/LAST event coordinates, COUNT(*) of matched events, and the
+    * exact long sum of `valueExpr` over them, aggregated off the
+    * bounded ring. `valueExpr` is any SQL expression over the parsed
+    * columns yielding a LONG (pre-scale money to cents; the default is
+    * the batch ev_match_measures cents cast). Same contract as
+    * [[matchSpans]]; at quiescence the emitted set equals the batch
+    * matchMeasuresOf fold. */
   def matchMeasures(spark: SparkSession, parsed: DataFrame,
                     pattern: String,
                     codeExpr: String = funnelCode,
@@ -760,67 +527,21 @@ object CepPattern extends Serializable {
                     allowedLatenessUs: Long = 0L,
                     onLate: String = "fail",
                     maxBufferedEvents: Int = DefaultMaxBuffered)
-      : Dataset[CepMeasureMatch] = {
-    requireGuardArgs(allowedLatenessUs, onLate, maxBufferedEvents)
-    val prog = RowPattern.compile(pattern)
-    require(RowPattern.terminatorDisjoint(prog),
-      s"streaming MEASURES mode needs a terminator-disjoint pattern; " +
-        s"'$pattern' is not — use matches() (count mode)")
-    implicit val stateEnc: Encoder[MeasureState] =
-      Encoders.javaSerialization[MeasureState]
-    import spark.implicits._
+      : Dataset[CepMeasureMatch] =
+    typed[CepMeasureMatch](driveCoded(parsed, codeExpr,
+      Guard(allowedLatenessUs, onLate, maxBufferedEvents), valueExpr)(
+      new RowMatcher.Spans(pattern, _, RowMatcher.PerMatch)))
 
-    def update(userId: Long, events: Iterator[CepValEvent],
-               state: GroupState[MeasureState])
-        : Iterator[CepMeasureMatch] = {
-      val st = state.getOption.getOrElse(new MeasureState(
-        new RowPattern.SpanRing[(Long, Long, Long)](
-          new RowPattern.MatchCounter(prog, trackSpans = true))))
-      val evs = events.toArray.sortBy(e => (e.ts_us, e.event_id))
-        .map(e => (e.ts_us, e.event_id, (e.code, e.v)))
-      val out = ArrayBuffer.empty[CepMeasureMatch]
-      admit(st, userId, evs, allowedLatenessUs, onLate, maxBufferedEvents)
-        .foreach { case (ts, id, (code, v)) =>
-          require(code.length == 1,
-            "streaming MEASURES mode needs exactly one code char per event")
-          st.ring.feed((ts, id, v), code.charAt(0)).foreach { sp =>
-            st.seq += 1
-            val evsIn = st.ring.slice(sp)
-            var sum = 0L
-            evsIn.foreach(sum += _._3)
-            val (sus, sid, _) = evsIn.head
-            val (eus, eid, _) = evsIn.last
-            out += CepMeasureMatch(userId, st.seq, sus, sid, eus, eid,
-              evsIn.length.toLong, sum)
-          }
-          st.ring.prune()
-        }
-      state.update(st)
-      out.iterator
-    }
-
-    parsed
-      .selectExpr("user_id", "event_id", "unix_micros(ts) AS ts_us",
-        s"($codeExpr) AS code", s"($valueExpr) AS v")
-      .as[CepValEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(update)
-  }
-
-  /** Streaming AFTER MATCH SKIP (round 11 — every SQL:2016 skip mode
-    * over a stream): the [[RowPattern.SkipScanner]] itself is the
-    * checkpointed per-key state — the buffered current attempt plus
-    * the anchored thread set round-trip the state store — so matches
-    * under SKIP TO FIRST/LAST `<var>` (and PAST LAST ROW / TO NEXT
-    * ROW through the same scanner) emit EXACTLY ONCE as the scanner
-    * confirms them, Append-shaped, overlap allowed at the resume row.
-    * Per-key state is one attempt's rows (bounded by the longest
-    * match attempt, never the key's history) + the reorder buffer;
-    * same admission guard and hard cap as [[matches]]. Degenerate
-    * skips fail loudly mid-stream exactly as in batch. At quiescence
-    * the emitted set equals the batch matchSpansSkip fold over the
-    * same components (restart-twin-pinned in CepPatternSpec). */
+  /** Streaming AFTER MATCH SKIP (every SQL:2016 skip mode over a
+    * stream): the [[RowPattern.SkipScanner]] — the buffered current
+    * attempt plus the anchored thread set — is the checkpointed
+    * per-key state, so matches under SKIP TO FIRST/LAST `<var>` (and
+    * PAST LAST ROW / TO NEXT ROW) emit EXACTLY ONCE as the scanner
+    * confirms them, overlap allowed at the resume row. Per-key state is
+    * one attempt's rows + the reorder buffer. Degenerate skips fail
+    * loudly mid-stream exactly as in batch. At quiescence the emitted
+    * set equals the batch matchSpansSkip fold over the same
+    * components. */
   def matchSkip(spark: SparkSession, parsed: DataFrame,
                 components: Seq[(String, String)],
                 skip: RowPattern.SkipMode,
@@ -828,65 +549,21 @@ object CepPattern extends Serializable {
                 allowedLatenessUs: Long = 0L,
                 onLate: String = "fail",
                 maxBufferedEvents: Int = DefaultMaxBuffered)
-      : Dataset[CepSkipMatch] = {
-    requireGuardArgs(allowedLatenessUs, onLate, maxBufferedEvents)
-    val sp = new RowPattern.SkipProgram(components)
-    // validate the skip target at plan time (construction checks it)
-    new RowPattern.SkipScanner[(Long, Long)](sp, skip)
-    implicit val stateEnc: Encoder[SkipState] =
-      Encoders.javaSerialization[SkipState]
-    import spark.implicits._
+      : Dataset[CepSkipMatch] =
+    typed[CepSkipMatch](driveCoded(parsed, codeExpr,
+      Guard(allowedLatenessUs, onLate, maxBufferedEvents))(
+      new RowMatcher.Skips(components, skip, _, RowMatcher.PerMatch)))
 
-    def update(userId: Long, events: Iterator[CepEvent],
-               state: GroupState[SkipState])
-        : Iterator[CepSkipMatch] = {
-      val st = state.getOption.getOrElse(new SkipState(
-        new RowPattern.SkipScanner[(Long, Long)](sp, skip)))
-      val evs = events.toArray.sortBy(e => (e.ts_us, e.event_id))
-        .map(e => (e.ts_us, e.event_id, e.code))
-      val out = ArrayBuffer.empty[CepSkipMatch]
-      admit(st, userId, evs, allowedLatenessUs, onLate, maxBufferedEvents)
-        .foreach { case (ts, id, code) =>
-          require(code.length == 1,
-            "streaming skip mode needs exactly one code char per event")
-          st.sc.feed(code.charAt(0), (ts, id)).foreach { m =>
-            st.seq += 1
-            val (sus, sid) = m.first
-            val (eus, eid) = m.last
-            out += CepSkipMatch(userId, st.seq, sus, sid, eus, eid,
-              m.len.toLong)
-          }
-        }
-      state.update(st)
-      out.iterator
-    }
-
-    parsed
-      .selectExpr("user_id", "event_id", "unix_micros(ts) AS ts_us",
-        s"($codeExpr) AS code")
-      .as[CepEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(update)
-  }
-
-  /** Streaming PER-VARIABLE MEASURES (round 12 — the first of the two
-    * batch-only round-11 modes gains its streaming leg): the
-    * [[RowPattern.SkipScanner]] carries (tieCol id, measureCol value)
-    * payloads as checkpointed per-key state, the classifier runs
-    * inside the state ([[matchesBy]]'s DEFINE/PREV contract, prev row
-    * carried across batches and restarts), and every CONFIRMED match
-    * emits one row PER COMPONENT — `(user_id, match_seq, var_name,
-    * n_rows, sum_value)`, the count and exact long sum of `measureCol`
-    * over exactly the rows the priority-order DFS maps to that
-    * component (java.regex's groups) — exactly once, Append-shaped.
-    * `subsets` adds SQL:2016 SUBSET rows — one more row per match per
-    * named union, var_name the subset's name (the batch
-    * matchVarMeasures contract, streaming). The streaming twin of the
-    * batch matchVarMeasures fold (restart-twin-pinned in
-    * CepPatternSpec); `measureCol` must be LONG (pre-scale money to
-    * cents). Same ordering guard, buffer hard cap, and one-attempt
-    * state bound as [[matchSkip]]. */
+  /** Streaming PER-VARIABLE MEASURES: the skip scanner over
+    * (tieCol id, measureCol value) rows with the classifier inside the
+    * state ([[matchesBy]]'s DEFINE/PREV contract); every CONFIRMED
+    * match emits one row PER COMPONENT — `(user_id, match_seq,
+    * var_name, n_rows, sum_value)`, the count and exact long sum of
+    * `measureCol` over exactly the rows java.regex's groups map to
+    * that component — then one per SQL:2016 SUBSET (the batch
+    * matchVarMeasures contract). `measureCol` must be LONG (pre-scale
+    * money to cents). Same guard and one-attempt state bound as
+    * [[matchSkip]]. */
   def matchVarMeasuresBy(spark: SparkSession, events: DataFrame,
                          components: Seq[(String, String)],
                          skip: RowPattern.SkipMode,
@@ -898,112 +575,30 @@ object CepPattern extends Serializable {
                          onLate: String = "fail",
                          maxBufferedEvents: Int = DefaultMaxBuffered,
                          subsets: Seq[(String, Seq[String])] = Nil)
-                        (classify: (org.apache.spark.sql.Row,
-                          org.apache.spark.sql.Row) => Char)
+                        (classify: (Row, Row) => Char)
       : Dataset[CepVarMeasure] = {
-    requireGuardArgs(allowedLatenessUs, onLate, maxBufferedEvents)
-    val sp = new RowPattern.SkipProgram(components)
-    new RowPattern.SkipScanner[(Long, Long)](sp, skip) // plan-time check
-    val names = components.map(_._1).toIndexedSeq
-    // SQL:2016 SUBSET over a stream (round 12 — the batch
-    // matchVarMeasures contract): each subset emits ONE MORE row per
-    // confirmed match, var_name = the subset's name, aggregated over
-    // the union of its member components' rows (members partition the
-    // match, so sums add). Same loud validation as batch.
-    subsets.foreach { case (sn, members) =>
-      require(members.nonEmpty, s"SUBSET $sn needs at least one member")
-      require(!names.contains(sn),
-        s"SUBSET name '$sn' collides with a component name")
-      members.foreach(mn => require(names.contains(mn),
-        s"SUBSET $sn member '$mn' is not a declared component " +
-          s"(have: ${names.mkString(",")})"))
-      require(members.distinct.length == members.length,
-        s"SUBSET $sn lists a member twice")
-    }
-    require(subsets.map(_._1).distinct.length == subsets.length,
-      "duplicate SUBSET names")
-    val subsetIdx: IndexedSeq[(String, Seq[Int])] =
-      subsets.map { case (sn, ms) =>
-        sn -> ms.map(names.indexOf(_)) }.toIndexedSeq
-    implicit val stateEnc: Encoder[VarMeasureState] =
-      Encoders.javaSerialization[VarMeasureState]
-    import spark.implicits._
-    val withOrder = events.withColumn("__ts_us",
-      org.apache.spark.sql.functions.unix_micros(
-        org.apache.spark.sql.functions.col(orderCol)))
-    val schema = withOrder.schema
-    val idIdx = schema.fieldIndex(idCol)
-    val tieIdx = schema.fieldIndex(tieCol)
-    val usIdx = schema.fieldIndex("__ts_us")
-    val mIdx = schema.fieldIndex(measureCol)
-    implicit val rowEnc: Encoder[org.apache.spark.sql.Row] =
-      org.apache.spark.sql.Encoders.row(schema)
-
-    def update(userId: Long, rows: Iterator[org.apache.spark.sql.Row],
-               state: GroupState[VarMeasureState])
-        : Iterator[CepVarMeasure] = {
-      val st = state.getOption.getOrElse(new VarMeasureState(
-        new RowPattern.SkipScanner[(Long, Long)](sp, skip)))
-      val evs = rows.toArray
-        .map(r => (r.getLong(usIdx), r.getLong(tieIdx), r))
-        .sortBy(e => (e._1, e._2))
-      val out = ArrayBuffer.empty[CepVarMeasure]
-      admit(st, userId, evs, allowedLatenessUs, onLate, maxBufferedEvents)
-        .foreach { case (_, id, r) =>
-          val c = classify(st.prev, r)
-          st.prev = r
-          val mv = if (r.isNullAt(mIdx)) 0L else r.getLong(mIdx)
-          st.sc.feed(c, (id, mv)).foreach { m =>
-            st.seq += 1
-            val perN = new Array[Long](names.length)
-            val perS = new Array[Long](names.length)
-            names.indices.foreach { i =>
-              val comp = m.comp(i)
-              var s = 0L
-              comp.foreach(s += _._2)
-              perN(i) = comp.length.toLong
-              perS(i) = s
-              out += CepVarMeasure(userId, st.seq, names(i), perN(i), s)
-            }
-            subsetIdx.foreach { case (sn, is) =>
-              out += CepVarMeasure(userId, st.seq, sn,
-                is.map(perN).sum, is.map(perS).sum)
-            }
-          }
-        }
-      state.update(st)
-      out.iterator
-    }
-
-    withOrder
-      .as(rowEnc)
-      .groupByKey(_.getLong(idIdx))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(update)
+    val shape =
+      RowMatcher.VarMeasures(components.map(_._1).toIndexedSeq, subsets)
+    val wide = driveBy(events, idCol, tieCol, orderCol,
+      Guard(allowedLatenessUs, onLate, maxBufferedEvents), measureCol)(
+      new RowMatcher.Skips(components, skip, _, shape, classify))
+    typed[CepVarMeasure](wide.select(col("user_id"), col("match_seq"),
+      inline(array(shape.groups.map(n => struct(lit(n).as("var_name"),
+        col(s"`${n}_n`").as("n_rows"), col(s"`${n}_sum`").as("sum_value")))
+        : _*))))
   }
 
-  /** Streaming FIRST/LAST VALUE NAVIGATION (round 14 — the last
-    * MEASURES form still batch-only after round 13 closed
-    * RUNNING/FINAL): when a match of the named-component pattern
-    * confirms, one row emits PER COMPONENT with the measure value of
-    * the first and last rows java.regex's group assignment maps to it
-    * — `FIRST(down.price)` / `LAST(down.price)` — exactly once,
-    * Append-shaped, off the checkpointed [[RowPattern.SkipScanner]]
-    * whose buffered attempt already holds the covered rows at
-    * confirmation. NULL legs both carried faithfully: a component that
-    * matched ZERO rows (an `X*` that matched empty — SQL:2016
-    * navigation-on-empty) emits None/None, and a matched boundary row
-    * whose measure is itself NULL emits None for that side (navigation
-    * is value-preserving, unlike SUM, which ignores NULLs — the
-    * Option payload rides the ring un-coerced; ADVICE r13).
+  /** Streaming FIRST/LAST VALUE NAVIGATION: when a match of the
+    * named-component pattern confirms, one row emits PER COMPONENT with
+    * the measure value of the first and last rows java.regex's group
+    * assignment maps to it — `FIRST(down.price)` / `LAST(down.price)` —
+    * None for a component that matched ZERO rows and for a NULL
+    * boundary measure (navigation is value-preserving, unlike SUM).
     * Classification inside the state ([[matchesBy]]'s DEFINE/PREV
-    * contract, prev carried across batches and restarts); composes
-    * with every AFTER MATCH SKIP mode; same ordering guard, buffer
-    * hard cap, and one-attempt state bound as [[matchSkip]]. The
-    * streaming twin of the batch matchVarNav fold (the oracle-checked
-    * `ev_vshape_firstlast` path) — restart-twin-pinned in
-    * CepPatternSpec with a match crossing the checkpoint and an
-    * empty-component (`U*`) match in the stream. */
+    * contract); composes with every AFTER MATCH SKIP mode; same guard
+    * and one-attempt state bound as [[matchSkip]]. The streaming twin
+    * of the batch matchVarNav fold (the oracle-checked
+    * `ev_vshape_firstlast` path). */
   def matchVarNavBy(spark: SparkSession, events: DataFrame,
                     components: Seq[(String, String)],
                     skip: RowPattern.SkipMode,
@@ -1014,78 +609,27 @@ object CepPattern extends Serializable {
                     allowedLatenessUs: Long = 0L,
                     onLate: String = "fail",
                     maxBufferedEvents: Int = DefaultMaxBuffered)
-                   (classify: (org.apache.spark.sql.Row,
-                     org.apache.spark.sql.Row) => Char)
+                   (classify: (Row, Row) => Char)
       : Dataset[CepVarNav] = {
-    requireGuardArgs(allowedLatenessUs, onLate, maxBufferedEvents)
-    val sp = new RowPattern.SkipProgram(components)
-    new RowPattern.SkipScanner[(Long, Option[Long])](sp, skip) // plan-time
-    val names = components.map(_._1).toIndexedSeq
-    implicit val stateEnc: Encoder[VarNavState] =
-      Encoders.javaSerialization[VarNavState]
-    import spark.implicits._
-    val withOrder = events.withColumn("__ts_us",
-      org.apache.spark.sql.functions.unix_micros(
-        org.apache.spark.sql.functions.col(orderCol)))
-    val schema = withOrder.schema
-    val idIdx = schema.fieldIndex(idCol)
-    val tieIdx = schema.fieldIndex(tieCol)
-    val usIdx = schema.fieldIndex("__ts_us")
-    val mIdx = schema.fieldIndex(measureCol)
-    implicit val rowEnc: Encoder[org.apache.spark.sql.Row] =
-      org.apache.spark.sql.Encoders.row(schema)
-
-    def update(userId: Long, rows: Iterator[org.apache.spark.sql.Row],
-               state: GroupState[VarNavState]): Iterator[CepVarNav] = {
-      val st = state.getOption.getOrElse(new VarNavState(
-        new RowPattern.SkipScanner[(Long, Option[Long])](sp, skip)))
-      val evs = rows.toArray
-        .map(r => (r.getLong(usIdx), r.getLong(tieIdx), r))
-        .sortBy(e => (e._1, e._2))
-      val out = ArrayBuffer.empty[CepVarNav]
-      admit(st, userId, evs, allowedLatenessUs, onLate, maxBufferedEvents)
-        .foreach { case (_, id, r) =>
-          val c = classify(st.prev, r)
-          st.prev = r
-          val mv: Option[Long] =
-            if (r.isNullAt(mIdx)) None else Some(r.getLong(mIdx))
-          st.sc.feed(c, (id, mv)).foreach { m =>
-            st.seq += 1
-            val (sid, _) = m.first
-            val (eid, _) = m.last
-            names.indices.foreach { i =>
-              val comp = m.comp(i)
-              if (comp.isEmpty)
-                out += CepVarNav(userId, st.seq, sid, eid, names(i),
-                  None, None)
-              else
-                out += CepVarNav(userId, st.seq, sid, eid, names(i),
-                  comp.head._2, comp.last._2)
-            }
-          }
-        }
-      state.update(st)
-      out.iterator
-    }
-
-    withOrder
-      .as(rowEnc)
-      .groupByKey(_.getLong(idIdx))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(update)
+    val names = components.map(_._1)
+    val wide = driveBy(events, idCol, tieCol, orderCol,
+      Guard(allowedLatenessUs, onLate, maxBufferedEvents), measureCol)(
+      new RowMatcher.Skips(components, skip, _,
+        RowMatcher.VarNav(names.toIndexedSeq), classify))
+    typed[CepVarNav](wide.select(col("user_id"), col("match_seq"),
+      col("start_id"), col("end_id"),
+      inline(array(names.map(n => struct(lit(n).as("var_name"),
+        col(s"`${n}_first`").as("first_value"),
+        col(s"`${n}_last`").as("last_value"))): _*))))
   }
 
-  /** Streaming labeled ALL ROWS for skip-mode patterns (round 12 — the
-    * second batch-only round-11 mode gains its streaming leg): when a
-    * match confirms, EVERY row it covers emits with the NAME of the
+  /** Streaming labeled ALL ROWS for skip-mode patterns: when a match
+    * confirms, EVERY row it covers emits with the NAME of the
     * component it mapped to — `(user_id, match_seq, ord_in_match, id,
-    * var_name)` — exactly once, Append-shaped; under an overlapping
-    * skip a shared row re-emits once per match it participates in,
-    * with that match's ordinal (the batch matchRowsSkip grain). The
-    * SkipScanner's buffered attempt already holds the covered rows at
-    * confirmation, so per-row emission costs no extra state. Streaming
-    * twin of the batch matchRowsSkip fold (restart-twin-pinned in
-    * CepPatternSpec); same guard, cap, and bounds as [[matchSkip]]. */
+    * var_name)` — exactly once; under an overlapping skip a shared row
+    * re-emits once per match it participates in, with that match's
+    * ordinal (the batch matchRowsSkip grain). Same guard, cap, and
+    * bounds as [[matchSkip]]. */
   def matchRowsSkipBy(spark: SparkSession, events: DataFrame,
                       components: Seq[(String, String)],
                       skip: RowPattern.SkipMode,
@@ -1095,76 +639,24 @@ object CepPattern extends Serializable {
                       allowedLatenessUs: Long = 0L,
                       onLate: String = "fail",
                       maxBufferedEvents: Int = DefaultMaxBuffered)
-                     (classify: (org.apache.spark.sql.Row,
-                       org.apache.spark.sql.Row) => Char)
-      : Dataset[CepVarRow] = {
-    requireGuardArgs(allowedLatenessUs, onLate, maxBufferedEvents)
-    val sp = new RowPattern.SkipProgram(components)
-    new RowPattern.SkipScanner[Long](sp, skip) // plan-time check
-    val names = components.map(_._1).toIndexedSeq
-    implicit val stateEnc: Encoder[VarRowState] =
-      Encoders.javaSerialization[VarRowState]
-    import spark.implicits._
-    val withOrder = events.withColumn("__ts_us",
-      org.apache.spark.sql.functions.unix_micros(
-        org.apache.spark.sql.functions.col(orderCol)))
-    val schema = withOrder.schema
-    val idIdx = schema.fieldIndex(idCol)
-    val tieIdx = schema.fieldIndex(tieCol)
-    val usIdx = schema.fieldIndex("__ts_us")
-    implicit val rowEnc: Encoder[org.apache.spark.sql.Row] =
-      org.apache.spark.sql.Encoders.row(schema)
+                     (classify: (Row, Row) => Char)
+      : Dataset[CepVarRow] =
+    typed[CepVarRow](driveBy(events, idCol, tieCol, orderCol,
+      Guard(allowedLatenessUs, onLate, maxBufferedEvents))(
+      new RowMatcher.Skips(components, skip, _,
+        RowMatcher.Labeled(components.map(_._1).toIndexedSeq), classify)),
+      "var_name" -> "var")
 
-    def update(userId: Long, rows: Iterator[org.apache.spark.sql.Row],
-               state: GroupState[VarRowState]): Iterator[CepVarRow] = {
-      val st = state.getOption.getOrElse(new VarRowState(
-        new RowPattern.SkipScanner[Long](sp, skip)))
-      val evs = rows.toArray
-        .map(r => (r.getLong(usIdx), r.getLong(tieIdx), r))
-        .sortBy(e => (e._1, e._2))
-      val out = ArrayBuffer.empty[CepVarRow]
-      admit(st, userId, evs, allowedLatenessUs, onLate, maxBufferedEvents)
-        .foreach { case (_, id, r) =>
-          val c = classify(st.prev, r)
-          st.prev = r
-          st.sc.feed(c, id).foreach { m =>
-            st.seq += 1
-            names.indices.foreach { ci =>
-              val base = m.bounds(ci)
-              m.comp(ci).zipWithIndex.foreach { case (rid, off) =>
-                out += CepVarRow(userId, st.seq, base + off + 1L, rid,
-                  names(ci))
-              }
-            }
-          }
-        }
-      state.update(st)
-      out.iterator
-    }
-
-    withOrder
-      .as(rowEnc)
-      .groupByKey(_.getLong(idIdx))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(update)
-  }
-
-  /** Streaming ALL ROWS with RUNNING/FINAL measures (round 13 — the
-    * last batch-only MEASURES leg gains its streaming shape): when a
-    * match confirms, every covered row emits with the SQL:2016
-    * RUNNING SUM (the inclusive prefix sum of `measureCol` inside the
-    * match — the ring slice walks in order, so the accumulator is
-    * free) and the FINAL SUM (the match total, known at confirmation
-    * since spans only emit confirmed; equal to running on the last
-    * row, and RUNNING COUNT(*) is `ord_in_match`). Emission is exactly
-    * once, Append-shaped — a span confirms once, its rows and both
-    * sums are final. Classification inside the checkpointed state
-    * (the DEFINE/PREV contract of [[matchSpansBy]]); same admission
-    * guard, buffer cap, and terminator-disjoint requirement as the
-    * other span-backed modes; `measureCol` must be LONG (pre-scale
-    * money to cents). Restart-twin-pinned against the batch
-    * matchRowsRunning fold (the oracle-checked `ev_updown_running`
-    * path) in CepPatternSpec with a match crossing the checkpoint. */
+  /** Streaming ALL ROWS with RUNNING/FINAL measures: when a match
+    * confirms, every covered row emits with the SQL:2016 RUNNING SUM
+    * (the inclusive prefix sum of `measureCol` inside the match) and
+    * the FINAL SUM (the match total — known at confirmation, equal to
+    * running on the last row; RUNNING COUNT(*) is `ord_in_match`),
+    * exactly once. Classification inside the checkpointed state (the
+    * DEFINE/PREV contract of [[matchSpansBy]]); terminator-disjoint
+    * patterns only; `measureCol` must be LONG (pre-scale money to
+    * cents). The streaming twin of the batch matchRowsRunning fold (the
+    * oracle-checked `ev_updown_running` path). */
   def matchRowsRunningBy(spark: SparkSession, events: DataFrame,
                          pattern: String,
                          idCol: String = "user_id",
@@ -1174,65 +666,9 @@ object CepPattern extends Serializable {
                          allowedLatenessUs: Long = 0L,
                          onLate: String = "fail",
                          maxBufferedEvents: Int = DefaultMaxBuffered)
-                        (classify: (org.apache.spark.sql.Row,
-                          org.apache.spark.sql.Row) => Char)
-      : Dataset[CepRunningRow] = {
-    requireGuardArgs(allowedLatenessUs, onLate, maxBufferedEvents)
-    val prog = RowPattern.compile(pattern)
-    require(RowPattern.terminatorDisjoint(prog),
-      s"streaming RUNNING-measures ALL ROWS mode needs a terminator-" +
-        s"disjoint pattern; '$pattern' is not — use matchesBy (count mode)")
-    implicit val stateEnc: Encoder[RunningRowState] =
-      Encoders.javaSerialization[RunningRowState]
-    import spark.implicits._
-    val withOrder = events.withColumn("__ts_us",
-      org.apache.spark.sql.functions.unix_micros(
-        org.apache.spark.sql.functions.col(orderCol)))
-    val schema = withOrder.schema
-    val idIdx = schema.fieldIndex(idCol)
-    val tieIdx = schema.fieldIndex(tieCol)
-    val usIdx = schema.fieldIndex("__ts_us")
-    val mIdx = schema.fieldIndex(measureCol)
-    implicit val rowEnc: Encoder[org.apache.spark.sql.Row] =
-      org.apache.spark.sql.Encoders.row(schema)
-
-    def update(userId: Long, rows: Iterator[org.apache.spark.sql.Row],
-               state: GroupState[RunningRowState])
-        : Iterator[CepRunningRow] = {
-      val st = state.getOption.getOrElse(new RunningRowState(
-        new RowPattern.SpanRing[(Long, String, Long)](
-          new RowPattern.MatchCounter(prog, trackSpans = true))))
-      val evs = rows.toArray
-        .map(r => (r.getLong(usIdx), r.getLong(tieIdx), r))
-        .sortBy(e => (e._1, e._2))
-      val out = ArrayBuffer.empty[CepRunningRow]
-      admit(st, userId, evs, allowedLatenessUs, onLate, maxBufferedEvents)
-        .foreach { case (_, id, r) =>
-          val c = classify(st.prev, r)
-          st.prev = r
-          val mv = if (r.isNullAt(mIdx)) 0L else r.getLong(mIdx)
-          st.ring.feed((id, String.valueOf(c), mv), c).foreach { sp =>
-            st.seq += 1
-            val evsIn = st.ring.slice(sp)
-            var total = 0L
-            evsIn.foreach(total += _._3)
-            var running = 0L
-            evsIn.zipWithIndex.foreach { case ((rid, cls, v), ord) =>
-              running += v
-              out += CepRunningRow(userId, st.seq, ord + 1L, rid, cls,
-                running, total)
-            }
-          }
-          st.ring.prune()
-        }
-      state.update(st)
-      out.iterator
-    }
-
-    withOrder
-      .as(rowEnc)
-      .groupByKey(_.getLong(idIdx))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(update)
-  }
+                        (classify: (Row, Row) => Char)
+      : Dataset[CepRunningRow] =
+    typed[CepRunningRow](driveBy(events, idCol, tieCol, orderCol,
+      Guard(allowedLatenessUs, onLate, maxBufferedEvents), measureCol)(
+      new RowMatcher.Spans(pattern, _, RowMatcher.AllRows, classify)))
 }

@@ -105,11 +105,16 @@ object StreamingIngest {
           else batch.dropDuplicates(keys)
         // stage to a scratch path first: Spark refuses to overwrite a
         // table that feeds the plan, and collect()-ing to the driver
-        // is exactly what a 100 TB merge must not do
-        val stage = s"/tmp/graft_scratch/upsert_stage/$table/$batchId"
-        merged.write.mode("overwrite").parquet(stage)
+        // is exactly what a 100 TB merge must not do. The stage is a
+        // full table copy, so it goes once the table has landed.
+        val stage = new org.apache.hadoop.fs.Path(
+          s"/tmp/graft_scratch/upsert_stage/$table/$batchId")
+        merged.write.mode("overwrite").parquet(stage.toString)
         graft.jobs.TableIO.overwrite(spark,
-          spark.read.parquet(stage), table)
+          spark.read.parquet(stage.toString), table)
+        stage.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .delete(stage, true)
+        ()
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())

@@ -997,6 +997,20 @@ class CepPatternSpec extends SparkSpec {
       r.getString(4))).distinct.length, "a nav row emitted twice")
   }
 
+  test("t10_cep_twin equals CepPattern.matches run in batch mode") {
+    // the streaming count mode over the batch events frame (each key's
+    // whole history in one group) against the oracle-checked twin
+    val folded = CepPattern.matches(spark, Tables.events(spark, sf),
+        "v[co]*p")
+      .collect().map(u => u.user_id -> u.n_matches).toMap
+    val twin = operators.Streaming.queries("t10_cep_twin")(spark, sf)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(twin.nonEmpty)
+    assert(twin === folded)
+    // the corpus actually exercises the pattern
+    assert(twin.values.exists(_ > 0))
+  }
+
   test("the spanning match is absent before the second chunk") {
     val base = Files.createTempDirectory("graft_cepspan")
     val src = Files.createDirectory(base.resolve("src"))

@@ -74,6 +74,18 @@ class RowPatternSpec extends AnyFunSuite {
     }
   }
 
+  test("exhaustive: v[co]*p traces over {v,c,p,o} up to length 8") {
+    // the funnel the CEP queries ship, on EVERY trace up to length 8
+    // (87 380 traces)
+    var checked = 0
+    def rec(prefix: String): Unit = {
+      if (prefix.nonEmpty) { check("v[co]*p", prefix); checked += 1 }
+      if (prefix.length < 8) "vcpo".foreach(c => rec(prefix + c))
+    }
+    rec("")
+    assert(checked === (1 to 8).map(n => math.pow(4, n).toLong).sum)
+  }
+
   test("randomized: long traces, all patterns (seeded)") {
     val rnd = new scala.util.Random(20260815L)
     for (p <- patterns; _ <- 1 to 60) {

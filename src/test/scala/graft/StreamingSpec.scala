@@ -158,6 +158,8 @@ class StreamingSpec extends SparkSpec {
     val src = Files.createDirectory(base.resolve("src"))
     val cp = base.resolve("cp").toString
     val table = "graft_stream_upsert_target"
+    val stage = new java.io.File(s"/tmp/graft_scratch/upsert_stage/$table")
+    org.apache.commons.io.FileUtils.deleteDirectory(stage) // earlier runs
 
     writeChunk(src, "b1.json", 0 until 100)
     val q1 = StreamingIngest.startUpsert(spark, src.toString, table, cp,
@@ -173,6 +175,11 @@ class StreamingSpec extends SparkSpec {
     val t = spark.table(table)
     assert(t.count() === 150) // no duplicates
     assert(t.select("event_id").distinct().count() === 150)
+    // each batch's staged table copy is deleted once the table landed,
+    // and the table reads the same without it
+    assert(Option(stage.list()).forall(_.isEmpty),
+      s"stage dirs left behind: ${Option(stage.list()).map(_.toSeq)}")
+    assert(spark.table(table).select("event_id").distinct().count() === 150)
   }
 
   test("windowed watermark aggregation: streaming result matches batch") {
