@@ -2,7 +2,7 @@ package graft.api
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.Dedup
+import graft.operators.{Dedup, Graph}
 
 /** Public library facade: the dedup family over ARBITRARY caller
   * DataFrames — the entry points a user switching from the reference
@@ -11,8 +11,8 @@ import graft.operators.Dedup
   * queries run (one implementation, two front doors), so the facade
   * inherits their correctness and their scale shape: native
   * [[graft.functions.MinHash9]] signatures (zero-shuffle projection),
-  * band-bucket equi-join candidates, digest-keyed exact dedup, and the
-  * Pregel-style component resolution.
+  * band-bucket equi-join candidates, digest-keyed exact dedup, and
+  * star-contraction component resolution.
   *
   * Column contract: callers name their id and text columns; results
   * come back keyed by the caller's id column.
@@ -221,8 +221,8 @@ object Corpus {
     graft.sources.Materialize.resultOnce("corpus.nearDupClustersAuto",
       s"$pairBudgetPerDoc", Seq(key)) {
       val (route, pairs) = routedPairs(key, pairBudgetPerDoc)
-      Dedup.components(pairs)
-        .withColumnRenamed("doc_id", idCol)
+      Graph.starComponents(pairs)
+        .withColumnRenamed("node", idCol)
         .withColumn("route", lit(route))
     }
   }
@@ -237,9 +237,9 @@ object Corpus {
     val in = normalized(docs, idCol, textCol)
     graft.sources.Materialize.resultOnce("corpus.nearDupClusters", "",
       Seq(in))(
-      Dedup.components(
+      Graph.starComponents(
           Dedup.minhashPairsOf(in, release = true).select("id1", "id2"))
-        .withColumnRenamed("doc_id", idCol))
+        .withColumnRenamed("node", idCol))
   }
 
   /** CLUSTER-AWARE keep-best (round 13; ROUTED round 14) — the

@@ -35,8 +35,8 @@ object Graphs {
 
   /** Connected components of an UNDIRECTED edge frame by alternating
     * star contraction — O(log diameter) rounds, the algorithm behind
-    * `gr_components` (label propagation pays O(diameter) and refuses
-    * deep chains). Returns (component, node); the component id is the
+    * `gr_components` and every graft clustering step, so deep chains
+    * converge too. Returns (component, node); the component id is the
     * component's minimum node id. */
   def components(edges: DataFrame, aCol: String = "src",
                  bCol: String = "dst"): DataFrame = {

@@ -583,75 +583,17 @@ object Dedup extends graft.QuerySet {
   }
 
   /** Near-dup CLUSTERS from the MinHash pair graph: connected
-    * components by iterative min-label propagation (the Pregel shape —
-    * each round joins labels across edges and keeps the per-vertex
-    * minimum), converging when no label changes. Components of a
-    * near-dup graph have tiny diameters (dup families are clique-like),
-    * so rounds ≈ 2–3; the driver loop carries only the CONVERGENCE
-    * COUNT, never data, and each round's labels are cached and the
-    * previous round unpersisted. This is the cluster-then-keep-one
-    * resolution step large corpus dedups run after LSH pairing.
+    * components by [[Graph.starComponents]] (alternating star
+    * contraction, converging when the pair graph is a star forest).
+    * Components of a near-dup graph have tiny diameters (dup families
+    * are clique-like), so one round usually suffices; the driver loop
+    * carries only the CONVERGENCE COUNT, never data. This is the
+    * cluster-then-keep-one resolution step large corpus dedups run
+    * after LSH pairing.
     * Output: (cluster_id = min doc_id of the component, doc_id). */
   private[graft] def minhashClusters(s: SparkSession, dir: String): DataFrame =
-    components(minhashPairs(s, dir).select("id1", "id2"))
-
-  /** Connected components of an undirected (id1, id2) edge set by
-    * min-label propagation. localCheckpoint (eager) after every round:
-    * an iterative plan that only caches still GROWS its lineage each
-    * round, and Catalyst + AQE re-plan the whole accumulated tree per
-    * job — planning time, not data, dominates. Checkpointing pins the
-    * round's result and restarts the lineage, keeping per-round cost
-    * constant. Each round's checkpoint blocks are explicitly
-    * unpersisted once the next round is materialized — at corpus scale
-    * the label table is one row per document, and without the explicit
-    * release every round's copy stays pinned in executor storage until
-    * a driver GC happens to run the ContextCleaner.
-    * Output: (cluster_id = min vertex of component, doc_id). */
-  private[graft] def components(pairDf: DataFrame): DataFrame = {
-    val sc = pairDf.sparkSession.sparkContext
-    def ids: Set[Int] = sc.getPersistentRDDs.keySet.toSet
-    // each localCheckpoint call registers its persistence handle
-    // driver-serially (even lazy ones), so the id-set delta around
-    // the call is exactly that checkpoint's blocks
-    def free(owned: Set[Int]): Unit = owned.foreach(id =>
-      sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-    var snap = ids
-    // LAZY checkpoints throughout: RDD.localCheckpoint registers the
-    // persistence handle synchronously (so the id-set delta around
-    // each call still owns exactly that checkpoint's blocks), and the
-    // round's single changed-count action materializes the blocks —
-    // the eager form paid a separate materialize job per round on top
-    // of the count (2 actions/round → 1)
-    val pairs = pairDf.toDF("id1", "id2").localCheckpoint(eager = false)
-    val pairIds = ids -- snap
-    val edges = pairs.unionAll(
-      pairs.select(col("id2").as("id1"), col("id1").as("id2")))
-    snap = ids
-    var labels = edges.select(col("id1").as("v")).distinct()
-      .withColumn("lbl", col("v")).localCheckpoint(eager = false)
-    var labelIds = ids -- snap
-    var changed = 1L
-    var rounds = 0
-    while (changed > 0 && rounds < 50) {
-      val nbrMin = edges.join(labels, edges("id2") === labels("v"))
-        .groupBy(edges("id1").as("nv")).agg(min("lbl").as("nbl"))
-      snap = ids
-      val next = labels.join(nbrMin, labels("v") === nbrMin("nv"), "left")
-        .select(col("v"),
-          least(col("lbl"), coalesce(col("nbl"), col("lbl"))).as("nlbl"),
-          col("lbl"))
-        .localCheckpoint(eager = false)
-      val nextIds = ids -- snap
-      changed = next.filter(col("nlbl") =!= col("lbl")).count()
-      free(labelIds -- nextIds) // previous round, now fully consumed
-      labelIds = nextIds
-      labels = next.select(col("v"), col("nlbl").as("lbl"))
-      rounds += 1
-    }
-    require(changed == 0, s"label propagation did not converge in $rounds")
-    free(pairIds) // converged: the result depends only on the last round
-    labels.select(col("lbl").as("cluster_id"), col("v").as("doc_id"))
-  }
+    Graph.starComponents(minhashPairs(s, dir).select("id1", "id2"))
+      .withColumnRenamed("node", "doc_id")
 
   val queries: Map[String, Q] = Map(
     // Exact dedup via hash-groupBy on normalized text: group on the
@@ -746,8 +688,9 @@ object Dedup extends graft.QuerySet {
         .orderBy("cfg")
     }),
 
-    // Connected components over the MinHash pair graph — the
-    // cluster-then-keep-one resolution step (see minhashClusters).
+    // Connected components (star contraction) over the MinHash pair
+    // graph — the cluster-then-keep-one resolution step (see
+    // minhashClusters).
     "dd_cluster" -> ((s, dir) =>
       minhashClusters(s, dir).orderBy("cluster_id", "doc_id")),
 
@@ -797,23 +740,24 @@ object Dedup extends graft.QuerySet {
     // nightly job READS yesterday's clusters, it never recomputes
     // them); tonight's edges come from the incremental band probe
     // (state×new + new×new — batch-scaled, never old×old). Per-night
-    // cost: the probe join plus label propagation whose round count is
+    // cost: the probe join plus star contraction whose round count is
     // governed by the NEW edges (stars have depth 1), each round one
-    // join over star edges ≈ docs-in-dup-families rows.
+    // window pass over star edges ≈ docs-in-dup-families rows.
     "dd_cluster_incr" -> ((s, dir) => {
       val oldStars = graft.sources.Materialize.tableOnce(s, dir,
         graft.sources.Materialize.indexTable("dd_old_stars", dir)) {
-        components(minhashPairsOf(
+        Graph.starComponents(minhashPairsOf(
             Tables(s, dir, "documents").filter(col("doc_id") % 5 =!= 0)
               .select("doc_id", "text"))
           .select("id1", "id2"))
-          .filter(col("doc_id") =!= col("cluster_id"))
-          .select(col("doc_id").as("id1"), col("cluster_id").as("id2"))
+          .filter(col("node") =!= col("cluster_id"))
+          .select(col("node").as("id1"), col("cluster_id").as("id2"))
       }
       val newPairs = incrementalScored(s, dir)
         .filter(col("n_match") >= 6)
         .select("id1", "id2")
-      components(oldStars.unionAll(newPairs))
+      Graph.starComponents(oldStars.unionAll(newPairs))
+        .withColumnRenamed("node", "doc_id")
         .orderBy("cluster_id", "doc_id")
     }),
 

@@ -8,8 +8,8 @@ import graft.Tables
   * lake tables — PageRank on the customer↔supplier trading graph
   * (edge (c, s) iff some order of customer c contains a lineitem
   * supplied by s; undirected, so each edge contributes both
-  * directions). Complements `dd_cluster`'s label propagation: that
-  * finds components, this ranks nodes by stationary visit mass.
+  * directions). Complements [[Graph.starComponents]]: that finds
+  * components, this ranks nodes by stationary visit mass.
   *
   * Everything is INTEGER-exact so the oracle replays it bit-for-bit:
   * ranks live in millionths (r0 = 1,000,000 per node), per-edge
@@ -40,14 +40,16 @@ object Graph extends graft.QuerySet {
 
   /** Connected components by ALTERNATING STAR CONTRACTION (the
     * large-star/small-star algorithm of Kiveris et al., "Connected
-    * Components in MapReduce and Beyond", SoCC'14). Complements
-    * [[Dedup.components]]'s min-label propagation: label propagation
-    * converges in O(diameter) rounds — a chain-shaped component of
-    * depth d costs d shuffles — while star contraction halves the
-    * effective depth per round pair, converging in O(log d) rounds on
-    * the same edge-list join primitives. On a 100 TB dup graph whose
-    * components can be long chains (transitive near-dup families),
-    * that is the difference between ~8 rounds and hundreds.
+    * Components in MapReduce and Beyond", SoCC'14) — graft's one
+    * components operator, behind `gr_components`, the near-dup and
+    * perceptual-hash clusters, the streaming cluster merge and the
+    * entity facades. Min-label propagation would converge in
+    * O(diameter) rounds — a chain-shaped component of depth d costs d
+    * shuffles — while star contraction halves the effective depth per
+    * round pair, converging in O(log d) rounds on the same edge-list
+    * join primitives. On a 100 TB dup graph whose components can be
+    * long chains (transitive near-dup families), that is the
+    * difference between ~8 rounds and hundreds.
     *
     * Both phases are expressed as joins against a per-node minimum —
     * no collect_list adjacency materialization, so a star root's
@@ -58,8 +60,11 @@ object Graph extends graft.QuerySet {
     *     u's smaller neighbors; u and each smaller neighbor rewire
     *     to m(u).
     * The fixpoint is a star per component (every node → component
-    * min). Each round localCheckpoints (same lineage-reset rationale
-    * as [[Dedup.components]]) and frees the previous round's blocks.
+    * min). Each round localCheckpoints — an iterative plan that only
+    * caches still GROWS its lineage, and Catalyst + AQE re-plan the
+    * whole accumulated tree per job, so the checkpoint restarts the
+    * lineage and keeps per-round cost constant — and frees the
+    * previous round's blocks ([[releaseCheckpoint]]).
     *
     * Cost shape: ONE Spark action per round. The round's checkpoint is
     * LAZY and the single action materializes next's blocks while
@@ -72,28 +77,17 @@ object Graph extends graft.QuerySet {
     * and stops on the round that PRODUCES the star forest instead of
     * one round later. GraphSpec pins the action count with a listener.
     *
-    * Block bookkeeping holds the checkpointed RDD handles directly
-    * (pattern-matched out of the LogicalRDD the checkpoint returns) —
-    * no global getPersistentRDDs diff, so concurrent jobs on the same
-    * SparkContext can persist blocks without this loop unpersisting
-    * them.
+    * Self-loops (a = b) carry no connectivity and are dropped, so a
+    * node that only appears in a self-loop is absent from the output.
     * Returns (cluster_id = component min, node) over edge-touched
-    * nodes. */
+    * nodes; the result reads the last round's blocks, which the
+    * caller may release with [[releaseCheckpoint]] once consumed. */
   private[graft] def starComponents(pairDf: DataFrame): DataFrame = {
     import pairDf.sparkSession.implicits._
-    // the checkpointed blocks behind a lazily-localCheckpointed frame:
-    // Dataset.localCheckpoint wraps the (possibly not-yet-materialized)
-    // checkpoint RDD in a LogicalRDD — that handle is exactly what a
-    // later unpersist must target
-    def ckRdds(df: DataFrame): Seq[org.apache.spark.rdd.RDD[_]] =
-      df.queryExecution.analyzed.collect {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-      }
     var e = pairDf.toDF("a", "b").filter(col("a") =!= col("b"))
       .select(greatest(col("a"), col("b")).as("u"),
         least(col("a"), col("b")).as("v"))
       .distinct().localCheckpoint(eager = false)
-    var eRdds = ckRdds(e)
     var rounds = 0
     var done = false
     // each star phase is ONE partition-window min (a single shuffle on
@@ -126,7 +120,6 @@ object Graph extends graft.QuerySet {
           struct(col("v").as("u"), col("m").as("v"))))).as("t"))
         .select(col("t.u").as("u"), col("t.v").as("v"))
         .distinct().localCheckpoint(eager = false)
-      val nextRdds = ckRdds(next)
       // the round's ONE action: materialize next and decide
       // convergence from next's OWN shape — next is final iff it is a
       // depth-1 forest (every u exactly once, and no u also appears
@@ -146,8 +139,7 @@ object Graph extends graft.QuerySet {
         .filter(col("nu") > 1 || (col("nu") >= 1 && col("nt") > col("nu")))
         .count()
       done = nBad == 0
-      eRdds.foreach(_.unpersist(blocking = false))
-      eRdds = nextRdds
+      releaseCheckpoint(e)
       e = next
       rounds += 1
     }
@@ -158,6 +150,23 @@ object Graph extends graft.QuerySet {
         .distinct())
     out
   }
+
+  /** Free the localCheckpoint blocks behind `df`. Dataset.localCheckpoint
+    * wraps the (possibly not-yet-materialized) checkpoint RDD in a
+    * LogicalRDD, and that handle is exactly what an unpersist must
+    * target: `Dataset.unpersist` only drops CacheManager entries and
+    * leaves checkpoint blocks pinned. Ownership is by handle, never by
+    * diffing the SparkContext's persistent-RDD set around a call —
+    * another query on the same SparkContext may persist or checkpoint
+    * meanwhile, and a diff would free its blocks too. Every LogicalRDD
+    * in `df`'s analyzed plan is released, so pass a checkpointed frame
+    * or a projection of one that this caller owns. */
+  private[graft] def releaseCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.analyzed.foreach {
+      case l: org.apache.spark.sql.execution.LogicalRDD =>
+        l.rdd.unpersist(blocking = false)
+      case _ =>
+    }
 
   /** Order-succession graph: each customer's orders chained in
     * (o_orderdate, o_orderkey) succession, plus a bridge between the
@@ -362,21 +371,17 @@ object Graph extends graft.QuerySet {
     * Peeling only deletes rows, so next ⊆ e always and the fixpoint
     * test is a row count — the round's single action, which also
     * materializes the round's localCheckpoint (same 1-job/round
-    * discipline as [[starComponents]], same direct-RDD-handle block
-    * bookkeeping). Rounds are data-bounded: each non-final round
-    * deletes ≥ 1 node, and on shell-structured graphs the cascade
-    * depth is the peel chain length, not the node count.
+    * discipline as [[starComponents]], and the same
+    * [[releaseCheckpoint]] of the previous round). Rounds are
+    * data-bounded: each non-final round deletes ≥ 1 node, and on
+    * shell-structured graphs the cascade depth is the peel chain
+    * length, not the node count.
     *
     * Returns (node, core_deg) for the surviving subgraph. */
   private[graft] def kcoreOf(edges: DataFrame, k: Int): DataFrame = {
-    def ckRdds(df: DataFrame): Seq[org.apache.spark.rdd.RDD[_]] =
-      df.queryExecution.analyzed.collect {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-      }
     val wU = org.apache.spark.sql.expressions.Window.partitionBy("u")
     val wV = org.apache.spark.sql.expressions.Window.partitionBy("v")
     var e = edges.toDF("u", "v").localCheckpoint(eager = false)
-    var eRdds = ckRdds(e)
     var cntE = e.count()
     var rounds = 0
     var changed = true
@@ -387,12 +392,10 @@ object Graph extends graft.QuerySet {
         .filter(col("du") >= k && col("dv") >= k)
         .select("u", "v")
         .localCheckpoint(eager = false)
-      val nextRdds = ckRdds(next)
       val cntNext = next.count() // materializes + tests the fixpoint
       changed = cntNext != cntE
       cntE = cntNext
-      eRdds.foreach(_.unpersist(blocking = false))
-      eRdds = nextRdds
+      releaseCheckpoint(e)
       e = next
       rounds += 1
     }
@@ -495,7 +498,7 @@ object Graph extends graft.QuerySet {
     // contraction (O(log d) rounds vs label propagation's O(d)); the
     // output is the component census (root id, size) — the shape a
     // dedup resolution step consumes. Correctness cross-checked against
-    // min-label propagation in GraphSpec on chain-heavy random graphs.
+    // a driver-side union-find in GraphSpec on chain-heavy random graphs.
     "gr_components" -> ((s, dir) =>
       starComponents(orderChainEdges(s, dir).select("u", "v"))
         .groupBy("cluster_id").agg(count(lit(1)).as("n_orders"))

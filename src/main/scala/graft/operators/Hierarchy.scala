@@ -26,7 +26,8 @@ import graft.Tables
   * ceil(log2(depth)) and the rollup against a driver-side walk.
   */
 object Hierarchy extends graft.QuerySet {
-  /** Rounds the most recent flatten call took — spec observability. */
+  /** Rounds the most recent flatten or flattenProd call took — spec
+    * observability. */
   @volatile private[graft] var lastRounds: Int = 0
 
   private def failNotAForest(rounds: Int): Nothing =
@@ -60,48 +61,28 @@ object Hierarchy extends graft.QuerySet {
   }
 
   /** (node, root, depth) for every node of a (node, parent) forest —
-    * roots carry parent == node. Rounds: each jump composes the
-    * current pointer with the pointee's pointer, doubling the levels
-    * covered, and the pointee's at-root flag rides along so no
-    * root-set join is ever needed. The loop's only per-round action
-    * is an any-not-done probe (limit-1 count — the frames are
-    * three-column and the round count is log-bounded, so eager
-    * per-round checkpointing would cost more than it saves). */
-  private[graft] def flatten(parents: DataFrame): DataFrame = {
-    val isRoot = col("parent") === col("node")
-    var st = parents.select(col("node"), col("parent").as("anc"),
-      when(isRoot, lit(0L)).otherwise(lit(1L)).as("d"),
-      isRoot.as("done"))
-      .localCheckpoint(eager = false)
-    var rounds = 0
-    var open = st.filter(!col("done")).limit(1).count() > 0
-    val maxRounds = if (open) validateForest(parents) else 0
-    while (open) {
-      if (rounds >= maxRounds) failNotAForest(rounds)
-      // jump: a's pointer composes with the pointee's own pointer;
-      // roots hold (r, r, 0, true) so composition is the identity
-      // there, and b's done flag says whether a's NEW pointer is a
-      // root — depth-aware termination with no root-set join
-      st = st.as("a")
-        .join(st.as("b"), col("a.anc") === col("b.node"))
-        .select(col("a.node"), col("b.anc").as("anc"),
-          (col("a.d") + col("b.d")).as("d"), col("b.done").as("done"))
-        .localCheckpoint(eager = false)
-      rounds += 1
-      open = st.filter(!col("done")).limit(1).count() > 0
-    }
-    lastRounds = rounds
-    st.select(col("node"), col("anc").as("root"), col("d").as("depth"))
-  }
+    * roots carry parent == node: [[flattenProd]] with every edge's
+    * quantity 1 and the path product projected away. */
+  private[graft] def flatten(parents: DataFrame): DataFrame =
+    flattenProd(parents.select(col("node"), col("parent"),
+        lit(1L).as("qty")))
+      .select("node", "root", "depth")
 
   /** Weighted flatten for BOM EXPLOSION: each (node, parent, qty) edge
     * carries a per-assembly quantity, and the answer is the PATH
     * PRODUCT (how many of this part one root unit requires — qty
     * multiplies at every level). Products compose exactly like the
-    * depth sums above — prod(a→c) = prod(a→b) · prod(b→c) — so the
-    * SAME pointer-jumping recurrence squares them in ~log2(depth)
-    * rounds; the invariant is prod = Π qty over path nodes from
-    * `node` inclusive to `anc` exclusive (roots contribute 1).
+    * depth sums — prod(a→c) = prod(a→b) · prod(b→c) — so the SAME
+    * pointer-jumping recurrence squares both in ~log2(depth) rounds;
+    * the invariant is prod = Π qty over path nodes from `node`
+    * inclusive to `anc` exclusive (roots contribute 1). Rounds: each
+    * jump composes the current pointer with the pointee's pointer,
+    * doubling the levels covered, and the pointee's at-root flag rides
+    * along so no root-set join is ever needed. The loop's only
+    * per-round action is an any-not-done probe (limit-1 count — the
+    * frames are five narrow columns and the round count is
+    * log-bounded, so eager per-round checkpointing would cost more
+    * than it saves).
     * Returns (node, root, depth, prod). */
   private[graft] def flattenProd(parents: DataFrame): DataFrame = {
     val isRoot = col("parent") === col("node")
@@ -113,8 +94,17 @@ object Hierarchy extends graft.QuerySet {
     var rounds = 0
     var open = st.filter(!col("done")).limit(1).count() > 0
     val maxRounds = if (open) validateForest(parents) else 0
+    // no per-round release of the previous round's blocks: the
+    // limit-1 probe need not compute every partition of the round's
+    // checkpoint, and a partition it skips is computed later through
+    // lineage from the previous round's blocks — freeing them would
+    // break that read
     while (open) {
       if (rounds >= maxRounds) failNotAForest(rounds)
+      // jump: a's pointer composes with the pointee's own pointer;
+      // roots hold (r, r, 0, 1, true) so composition is the identity
+      // there, and b's done flag says whether a's NEW pointer is a
+      // root — depth-aware termination with no root-set join
       st = st.as("a")
         .join(st.as("b"), col("a.anc") === col("b.node"))
         .select(col("a.node"), col("b.anc").as("anc"),
@@ -125,6 +115,7 @@ object Hierarchy extends graft.QuerySet {
       rounds += 1
       open = st.filter(!col("done")).limit(1).count() > 0
     }
+    lastRounds = rounds
     st.select(col("node"), col("anc").as("root"), col("d").as("depth"),
       col("prod"))
   }

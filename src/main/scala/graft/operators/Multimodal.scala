@@ -295,8 +295,8 @@ object Multimodal extends graft.QuerySet {
       .distinct()
       .filter(expr("bit_count(h1 ^ h2) <= 2"))
       .select("id1", "id2")
-    val comp = Dedup.components(pairs)
-      .withColumnRenamed("doc_id", "hrep")
+    val comp = Graph.starComponents(pairs)
+      .withColumnRenamed("node", "hrep")
     hashes.join(reps, "bits")
       .join(comp, Seq("hrep"), "left")
       .select(col("doc_id"),
@@ -400,8 +400,8 @@ object Multimodal extends graft.QuerySet {
       .select(least(col("rep1"), col("rep2")).as("id1"),
         greatest(col("rep1"), col("rep2")).as("id2"))
       .distinct()
-    val comp = Dedup.components(baseStars.unionAll(pairs))
-      .withColumnRenamed("doc_id", "rep")
+    val comp = Graph.starComponents(baseStars.unionAll(pairs))
+      .withColumnRenamed("node", "rep")
     val docRep = baseHashes.join(baseReps, "bits")
       .select(col("doc_id"), col("rep"))
       .unionByName(batchHashes.join(batchReps, "bits")
@@ -615,7 +615,7 @@ object Multimodal extends graft.QuerySet {
     // saturation cannot inflate. (2) the same 3-band Hamming join as
     // mm_phash_near over the DISTINCT hashes (recall exact by the same
     // pigeonhole), verified ≤ 2, then the dd_cluster connected-
-    // components reduction (Dedup.components — min-label propagation,
+    // components reduction (Graph.starComponents — star contraction,
     // one job per round) and a join mapping every doc through its hash
     // representative to its component's minimum; singleton hashes keep
     // themselves. ORACLE: the near relation is "same pattern class"

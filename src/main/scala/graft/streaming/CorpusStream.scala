@@ -6,7 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
-import graft.operators.Dedup
+import graft.operators.{Dedup, Graph}
 
 /** Streaming corpus curation: the LLM-training recipe's front gates
   * (quality → exact dedup → near-dup removal) running INCREMENTALLY
@@ -179,19 +179,19 @@ object CorpusStream {
       // preserves accumulated connectivity exactly, so components over
       // (prior star edges ∪ this batch's verified pairs) equal the
       // full-history recompute (CorpusStreamSpec pins stream clusters
-      // == batch dd_cluster twin). Per-batch cost: label propagation
+      // == batch dd_cluster twin). Per-batch cost: star contraction
       // whose rounds are governed by the NEW pairs (stars have depth
-      // 1), one star-table join per round — never a corpus re-pair.
-      // the whole merge's checkpoint blocks (components' final labels
-      // and any stragglers) are swept once the state is on disk — a
-      // long-running stream must not pin one labels copy per batch
-      val sc = s.sparkContext
-      val pinnedBefore = sc.getPersistentRDDs.keySet.toSet
+      // 1), one window pass over star edges per round — never a corpus
+      // re-pair. The contraction's last-round blocks are released by
+      // handle once the state is on disk — a long-running stream must
+      // not pin one labels copy per batch, and blocks another query
+      // persists on this SparkContext meanwhile are not ours to free
       val priorStars = readClusters(s, outDir)
-      val newStars = Dedup.components(
+      val newStars = Graph.starComponents(
         priorStars.filter(col("doc_id") =!= col("cluster_id"))
           .select(col("doc_id").as("id1"), col("cluster_id").as("id2"))
           .unionAll(scored.select("id1", "id2")))
+        .withColumnRenamed("node", "doc_id")
       // state + output appends (survivors first: a crash between writes
       // then re-curates the batch against unchanged state instead of
       // silently dropping it against half-written state; the cluster
@@ -204,9 +204,7 @@ object CorpusStream {
         .write.mode("append").parquet(s"$outDir/digests")
       sigs.write.mode("append").parquet(s"$outDir/sigs")
       val written = writeClusterState(s, outDir, priorStars, newStars)
-      (sc.getPersistentRDDs.keySet.toSet -- pinnedBefore).foreach(id =>
-        sc.getPersistentRDDs.get(id)
-          .foreach(_.unpersist(blocking = false)))
+      Graph.releaseCheckpoint(newStars)
       scored.unpersist()
       sigs.unpersist()
       written
@@ -317,9 +315,8 @@ object CorpusStream {
         (n, nFull)
       }
     } finally {
-      delta.unpersist(false)
-      nextC.unpersist(false)
-      ()
+      Graph.releaseCheckpoint(delta)
+      Graph.releaseCheckpoint(nextC)
     }
   }
 

@@ -139,7 +139,7 @@ class ApiSpec extends SparkSpec {
     "the selected branch's pair graph on BOTH routes") {
     import spark.implicits._
     def comp(pairs: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
-      operators.Dedup.components(pairs.select("id1", "id2"))
+      operators.Graph.starComponents(pairs.select("id1", "id2"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // lsh route: the replica-saturated corpus
     val saturated = (0L until 300L).map(i =>
@@ -179,7 +179,7 @@ class ApiSpec extends SparkSpec {
     def closure(docs: org.apache.spark.sql.DataFrame,
                 pairs: org.apache.spark.sql.DataFrame)
         : Set[(Long, Long, Long, Long)] = {
-      val cl = operators.Dedup.components(pairs.select("id1", "id2"))
+      val cl = operators.Graph.starComponents(pairs.select("id1", "id2"))
         .collect().map(r => r.getLong(1) -> r.getLong(0)).toMap
       val d = docs.collect().map(r => (r.getLong(0),
         r.getString(1).split(" ").distinct.length.toLong))

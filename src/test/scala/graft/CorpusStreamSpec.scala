@@ -1,10 +1,15 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicBoolean
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.operators.Dedup
+import graft.operators.{Dedup, Graph}
 import graft.streaming.CorpusStream
+import scala.jdk.CollectionConverters._
 
 /** Streaming corpus curation (quality → exact dedup → near-dup) equals
   * the batch recipe's front gates run over the full corpus, when
@@ -75,7 +80,7 @@ class CorpusStreamSpec extends SparkSpec {
     // (read through the versioned delta layout's reader — round 14)
     val streamClusters = CorpusStream.readClusters(spark, out)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val batchClusters = Dedup.components(
+    val batchClusters = Graph.starComponents(
         Dedup.minhashPairsOf(
           Tables(spark, sf, "documents").select("doc_id", "text"))
           .select("id1", "id2"))
@@ -171,19 +176,8 @@ class CorpusStreamSpec extends SparkSpec {
     // version number (the crash-then-replay collision the writer must
     // clear). The reader must reconstruct the exact labeling after
     // every step.
-    def unionFind(pairs: Seq[(Long, Long)]): Set[(Long, Long)] = {
-      val parent = scala.collection.mutable.Map.empty[Long, Long]
-      def find(x: Long): Long = {
-        val p = parent.getOrElseUpdate(x, x)
-        if (p == x) x else { val r = find(p); parent(x) = r; r }
-      }
-      pairs.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val verts = pairs.flatMap(p => Seq(p._1, p._2)).distinct
-      verts.map(v => (find(v), v)).toSet
-    }
+    def unionFind(pairs: Seq[(Long, Long)]): Set[(Long, Long)] =
+      UnionFind.labels(pairs).iterator.map(_.swap).toSet
     val rnd = new scala.util.Random(1405)
     val prior = CorpusStream.compactEvery
     try {
@@ -236,5 +230,40 @@ class CorpusStreamSpec extends SparkSpec {
     } finally {
       CorpusStream.compactEvery = prior
     }
+  }
+
+  test("a batch merge frees only its own blocks: frames checkpointed " +
+    "from another thread meanwhile stay readable") {
+    // a merge that freed every RDD appearing in the SparkContext's
+    // persistent set while it ran would take a concurrent query's
+    // checkpoint blocks, failing its next read with
+    // CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND. The other thread checkpoints
+    // continuously for the whole merge, so some of its frames land
+    // inside the merge however the two threads interleave.
+    val out = Files.createTempDirectory("graft_merge_owner")
+      .resolve("out").toString
+    val docs = Tables(spark, sf, "documents").select("doc_id", "text")
+    def handles(df: DataFrame): Seq[Int] =
+      df.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd.id }
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val theirs = new ConcurrentLinkedQueue[DataFrame]()
+    val stop = new AtomicBoolean(false)
+    val other = new Thread(() =>
+      while (!stop.get) {
+        theirs.add(spark.range(8).toDF("x").localCheckpoint())
+        Thread.sleep(5)
+      })
+    other.start()
+    try CorpusStream.curateBatch(docs, out, 5)
+    finally { stop.set(true); other.join() }
+    val frames = theirs.asScala.toSeq
+    try {
+      assert(frames.nonEmpty)
+      frames.foreach(f => assert(f.collect().length === 8))
+      // and the merge itself leaves none of its blocks pinned
+      val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before --
+        frames.flatMap(handles)
+      assert(leaked.isEmpty, s"merge left RDDs $leaked persisted")
+    } finally frames.foreach(Graph.releaseCheckpoint)
   }
 }

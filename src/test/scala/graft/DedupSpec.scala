@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Dedup
+import graft.operators.{Dedup, Graph}
 
 class DedupSpec extends SparkSpec {
 
@@ -162,15 +162,15 @@ class DedupSpec extends SparkSpec {
         val rot = rnd.nextInt(3)
         (i, (w.drop(rot) ++ w.take(rot)).mkString(" "))
       }.toDF("doc_id", "text")
-      val full = Dedup.components(
+      val full = Graph.starComponents(
           Dedup.minhashPairsOf(docs).select("id1", "id2"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       val oldDocs = docs.filter(col("doc_id") % 3 =!= trial % 3)
       val newDocs = docs // probe side: all signatures vs new batch
-      val oldStars = Dedup.components(
+      val oldStars = Graph.starComponents(
           Dedup.minhashPairsOf(oldDocs).select("id1", "id2"))
-        .filter(col("doc_id") =!= col("cluster_id"))
-        .select(col("doc_id").as("id1"), col("cluster_id").as("id2"))
+        .filter(col("node") =!= col("cluster_id"))
+        .select(col("node").as("id1"), col("cluster_id").as("id2"))
       // all×new + new×new pairs, mirroring incrementalScored's shape
       val bandsAll = Dedup.bandedSignaturesOf(docs)
       val bandsNew = Dedup.bandedSignaturesOf(
@@ -190,7 +190,7 @@ class DedupSpec extends SparkSpec {
         .distinct()
         .filter(col("n_match") >= 6)
         .select("id1", "id2")
-      val merged = Dedup.components(oldStars.unionAll(probe))
+      val merged = Graph.starComponents(oldStars.unionAll(probe))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(merged === full, s"trial $trial: $merged != $full")
       assert(full.nonEmpty, s"trial $trial degenerate (no pairs)")

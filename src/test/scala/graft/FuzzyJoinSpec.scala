@@ -96,11 +96,10 @@ class FuzzyJoinSpec extends SparkSpec {
     assert(census.values.sum === nNodes)
     // every entity spans at least one edge ⇒ ≥ 2 records
     assert(census.values.forall(_ >= 2))
-    // cross-algorithm: label propagation yields the identical census
-    val viaProp = operators.Dedup.components(rows.toDF("id1", "id2"))
-      .groupBy("cluster_id").agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(census === viaProp)
+    // cross-algorithm: a driver-side union-find yields the identical
+    // census
+    assert(census === UnionFind.census(
+      rows.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq))
   }
 
   test("jaro-winkler: textbook values, boost threshold, prefix cap") {

@@ -33,7 +33,7 @@ class GraphSpec extends SparkSpec {
     assert(r(3L) === leaf)
   }
 
-  test("star contraction equals label propagation on chain-heavy graphs") {
+  test("star contraction equals union-find on chain-heavy graphs") {
     // a 45-node path, a 40-node cycle, a 30-leaf star, random edges —
     // star contraction must produce the identical component labeling
     val path = (0L until 44L).map(i => (i, i + 1))
@@ -42,40 +42,31 @@ class GraphSpec extends SparkSpec {
     val rnd = new scala.util.Random(7)
     val rand = Seq.fill(60)((400L + rnd.nextInt(80), 400L + rnd.nextInt(80)))
       .filter { case (a, b) => a != b }
-    val pairs = (path ++ cycle ++ star ++ rand).toDF("id1", "id2")
-    val viaStar = operators.Graph.starComponents(pairs)
+    val edges = path ++ cycle ++ star ++ rand
+    val viaStar = operators.Graph.starComponents(edges.toDF("id1", "id2"))
       .collect().map(r => r.getLong(1) -> r.getLong(0)).toMap
-    val viaProp = operators.Dedup.components(pairs)
-      .collect().map(r => r.getLong(1) -> r.getLong(0)).toMap
-    assert(viaStar === viaProp)
+    assert(viaStar === UnionFind.labels(edges))
     // sanity: the path really is one component rooted at its min
     assert(viaStar(44L) === 0L)
     assert(viaStar(239L) === 200L)
   }
 
   test("star contraction conquers a path label propagation cannot") {
-    // diameter 499: label propagation needs ~500 rounds (its cap is 50
-    // — Dedup.components REFUSES this graph), star contraction's
-    // 30-round cap is ample at O(log d). This is the concrete payoff of
-    // carrying both algorithms.
+    // diameter 499: min-label propagation would need ~500 rounds (one
+    // per hop), star contraction's 30-round cap is ample at O(log d)
     val path = (0L until 499L).map(i => (i, i + 1)).toDF("id1", "id2")
     val labels = operators.Graph.starComponents(path)
       .collect().map(r => r.getLong(1) -> r.getLong(0)).toMap
     assert(labels.size === 500)
     assert(labels.values.toSet === Set(0L))
-    intercept[IllegalArgumentException] {
-      operators.Dedup.components(path).collect()
-    }
   }
 
-  test("gr_components census equals label propagation on the lake graph") {
+  test("gr_components census equals union-find on the lake graph") {
     val edges = operators.Graph.orderChainEdges(spark, sf).select("u", "v")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val viaStar = Graph.queries("gr_components")(spark, sf)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaProp = operators.Dedup.components(edges)
-      .groupBy("cluster_id").agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(viaStar === viaProp)
+    assert(viaStar === UnionFind.census(edges))
     assert(viaStar.nonEmpty)
   }
 

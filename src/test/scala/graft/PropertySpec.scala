@@ -65,7 +65,7 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
-  test("components: distributed propagation equals local union-find") {
+  test("components: star contraction equals local union-find") {
     import spark.implicits._
     // random sparse graphs with long chains (worst case for round
     // count) and dense clumps (worst case for volume)
@@ -78,24 +78,35 @@ class PropertySpec extends AnyFunSuite {
       } yield (math.min(a, b), math.max(a, b)))
     } yield es.distinct
     samples(edgeGen, 12).filter(_.nonEmpty).foreach { edges =>
-      val got = graft.operators.Dedup.components(edges.toDF("id1", "id2"))
+      val got = graft.operators.Graph.starComponents(edges.toDF("id1", "id2"))
         .collect().map(r => r.getLong(1) -> r.getLong(0)).toMap
-      // local union-find reference
-      val parent = scala.collection.mutable.Map.empty[Long, Long]
-      def find(x: Long): Long = {
-        val p = parent.getOrElseUpdate(x, x)
-        if (p == x) x else { val r = find(p); parent(x) = r; r }
-      }
-      edges.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val verts = edges.flatMap(e => Seq(e._1, e._2)).distinct
-      val byRoot = verts.groupBy(find)
-      val expected = byRoot.flatMap { case (_, vs) =>
-        val m = vs.min; vs.map(_ -> m)
-      }
-      assert(got === expected, s"edges $edges")
+      assert(got === UnionFind.labels(edges), s"edges $edges")
     }
   }
+}
+
+/** Driver-side union-find over an undirected edge list: every node
+  * that touches a non-self-loop edge, labeled by its component's
+  * minimum node — the reference the distributed components operator
+  * is checked against. */
+object UnionFind {
+  def labels(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    val links = edges.filter { case (a, b) => a != b }
+    // linking the larger root under the smaller keeps every root its
+    // component's minimum
+    links.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    links.flatMap(e => Seq(e._1, e._2)).distinct.map(v => v -> find(v)).toMap
+  }
+
+  /** Component root → member count. */
+  def census(edges: Seq[(Long, Long)]): Map[Long, Long] =
+    labels(edges).groupBy(_._2).map { case (root, m) => root -> m.size.toLong }
 }
